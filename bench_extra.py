@@ -78,12 +78,11 @@ def time_queries(names, trials=3):
 
     spark = _spark()
     qs = entry.queries()
-    # warmup: one untimed pass of the heaviest requested query
     for name in names:
         best = []
         for i in range(trials):
             spark.catalog.clearCache()
-            from frechetrange_spark.operators.range_query import clear_pack_cache
+            from frechetrange_spark.sources.pack_store import clear_pack_cache
 
             clear_pack_cache()
             df = qs[name](spark, SF_DIR)
@@ -127,7 +126,7 @@ def profile_self_join():
     _t("full range_self_join again", lambda: _noop(out2), spark)
     # end-to-end cold, as bench measures it
     spark.catalog.clearCache()
-    from frechetrange_spark.operators.range_query import clear_pack_cache
+    from frechetrange_spark.sources.pack_store import clear_pack_cache
 
     clear_pack_cache()
     df = entry._q_range_self_join(spark, SF_DIR)

@@ -459,7 +459,45 @@ def dfd_leq_batch(p: np.ndarray, q: np.ndarray, eps2: np.ndarray) -> np.ndarray:
     return out
 
 
-# funnel stage codes reported by decide_pairs_arrow(return_stages=True)
+def padded_pair_chunks(
+    bq: tuple,
+    bt: tuple,
+    qsel: np.ndarray,
+    tsel: np.ndarray,
+    chunk: int,
+    stable: bool = False,
+):
+    """Size-bucketed padded gathers over pairs with per-pair curve
+    indirection: ``bq``/``bt`` are (flat_x, off_x, flat_y, off_y) curve
+    TABLES (one list row per curve) and pair i compares curve ``qsel[i]``
+    of bq against curve ``tsel[i]`` of bt. Pairs are sorted by combined
+    length (``stable`` picks a stable sort) and cut into ``chunk``-pair
+    slices, so the padded working set stays O(chunk x longest curve in
+    the slice). Yields (rows, p, t, lens_p, lens_t) per slice: the pair
+    indices, the last-vertex-padded (b, N, 2)/(b, M, 2) stacks and the
+    true curve lengths."""
+    fqx, oqx, fqy, oqy = bq
+    ftx, otx, fty, oty = bt
+    lens_p = oqx[qsel + 1] - oqx[qsel]
+    lens_t = otx[tsel + 1] - otx[tsel]
+    order = np.argsort(lens_p + lens_t, kind="stable" if stable else None)
+    for s in range(0, int(qsel.size), chunk):
+        rows = order[s : s + chunk]
+        qr, tr = qsel[rows], tsel[rows]
+        lp, lt = lens_p[rows], lens_t[rows]
+        wp, wt = int(lp.max()), int(lt.max())
+        p = np.stack(
+            [_padded_gather(fqx, oqx, qr, wp), _padded_gather(fqy, oqy, qr, wp)],
+            axis=-1,
+        )
+        t = np.stack(
+            [_padded_gather(ftx, otx, tr, wt), _padded_gather(fty, oty, tr, wt)],
+            axis=-1,
+        )
+        yield rows, p, t, lp, lt
+
+
+# funnel stage codes reported by decide_pairs_buffers(return_stages=True)
 STAGE_ETD_ACCEPT = 1  # F8 equal-time upper bound <= eps
 STAGE_GREEDY_ACCEPT = 2  # F4 greedy upper bound <= eps
 STAGE_NEG_REJECT = 3  # F5 negative filter proved > eps
@@ -479,11 +517,25 @@ STAGE_NAMES = {
 }
 
 
-def decide_pairs_arrow(
-    qxs,
-    qys,
-    xs,
-    ys,
+def decide_pairs_arrow(qxs, qys, xs, ys, eps, **flags) -> np.ndarray:
+    """``decide_pairs_buffers`` straight from four pyarrow list columns of
+    B pair rows (identity selectors, zero-copy buffers); ``flags`` are
+    decide_pairs_buffers' keyword arguments."""
+    fqx, oqx = _list_buffers(qxs)
+    fqy, oqy = _list_buffers(qys)
+    ftx, otx = _list_buffers(xs)
+    fty, oty = _list_buffers(ys)
+    sel = np.arange(len(oqx) - 1, dtype=np.int64)
+    return decide_pairs_buffers(
+        (fqx, oqx, fqy, oqy), (ftx, otx, fty, oty), sel, sel, eps, **flags
+    )
+
+
+def decide_pairs_buffers(
+    bq: tuple,
+    bt: tuple,
+    qsel: np.ndarray,
+    tsel: np.ndarray,
     eps,
     chunk: int = 4096,
     etd_accept: bool = True,
@@ -493,8 +545,9 @@ def decide_pairs_arrow(
     dfd_accept: bool = False,
     return_stages: bool = False,
 ) -> np.ndarray:
-    """Batched decision straight from pyarrow list columns (B rows), with
-    size-bucketed padding. Returns bool (B,), or (bool, stage int8) with
+    """Batched decision for pair i = curve ``qsel[i]`` of bq vs curve
+    ``tsel[i]`` of bt (see padded_pair_chunks), at per-pair or scalar
+    ``eps``. Returns bool (B,), or (bool, stage int8) with
     ``return_stages``.
 
     Filter pack in the reference bb order (F4 accept -> F5 reject ->
@@ -517,80 +570,15 @@ def decide_pairs_arrow(
       than the free-space sweep, catches nearly all remaining true
       matches so the exact decider mostly sees rejects (which its
       early-exit compaction handles cheaply)."""
-    fqx, oqx = _list_buffers(qxs)
-    fqy, oqy = _list_buffers(qys)
-    ftx, otx = _list_buffers(xs)
-    fty, oty = _list_buffers(ys)
-    B = len(oqx) - 1
-    sel = np.arange(B, dtype=np.int64)
-    return decide_pairs_buffers(
-        (fqx, oqx, fqy, oqy),
-        (ftx, otx, fty, oty),
-        sel,
-        sel,
-        eps,
-        chunk=chunk,
-        etd_accept=etd_accept,
-        greedy_accept=greedy_accept,
-        neg_reject=neg_reject,
-        rev_greedy_accept=rev_greedy_accept,
-        dfd_accept=dfd_accept,
-        return_stages=return_stages,
-    )
-
-
-def decide_pairs_buffers(
-    bq: tuple,
-    bt: tuple,
-    qsel: np.ndarray,
-    tsel: np.ndarray,
-    eps,
-    chunk: int = 4096,
-    etd_accept: bool = True,
-    greedy_accept: bool = False,
-    neg_reject: bool = False,
-    rev_greedy_accept: bool = False,
-    dfd_accept: bool = False,
-    return_stages: bool = False,
-) -> np.ndarray:
-    """decide_pairs_arrow's core over raw list buffers with per-pair curve
-    indirection: ``bq``/``bt`` are (flat_x, off_x, flat_y, off_y) curve
-    TABLES (one list row per curve), and pair i compares curve
-    ``qsel[i]`` of bq against curve ``tsel[i]`` of bt. The arrow wrapper
-    passes identity selectors over per-pair columns; the broadcast-attach
-    refine passes id-resolved selectors into a shared curve table, so the
-    pair rows themselves carry no array bytes."""
     from frechetrange_spark.kernels.core import negfilter
 
-    fqx, oqx, fqy, oqy = bq
-    ftx, otx, fty, oty = bt
     B = int(qsel.size)
     out = np.zeros(B, dtype=bool)
     stages = np.zeros(B, dtype=np.int8)
     if B == 0:
         return (out, stages) if return_stages else out
     eps_arr = np.broadcast_to(np.asarray(eps, dtype=np.float64), (B,))
-    lens_p = oqx[qsel + 1] - oqx[qsel]
-    lens_t = otx[tsel + 1] - otx[tsel]
-    order = np.argsort(lens_p + lens_t)
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        wp = int(lens_p[rows].max())
-        wt = int(lens_t[rows].max())
-        p = np.stack(
-            [
-                _padded_gather(fqx, oqx, qsel[rows], wp),
-                _padded_gather(fqy, oqy, qsel[rows], wp),
-            ],
-            axis=-1,
-        )
-        t = np.stack(
-            [
-                _padded_gather(ftx, otx, tsel[rows], wt),
-                _padded_gather(fty, oty, tsel[rows], wt),
-            ],
-            axis=-1,
-        )
+    for rows, p, t, lp, lt in padded_pair_chunks(bq, bt, qsel, tsel, chunk):
         e = eps_arr[rows]
         res = np.zeros(rows.size, dtype=bool)
         stg = np.zeros(rows.size, dtype=np.int8)
@@ -601,9 +589,7 @@ def decide_pairs_buffers(
             stg[acc] = STAGE_ETD_ACCEPT
             todo = np.nonzero(~res)[0]
         if greedy_accept and todo.size:
-            ub = greedy_ub_batch(
-                p[todo], t[todo], lens_p[rows][todo], lens_t[rows][todo]
-            )
+            ub = greedy_ub_batch(p[todo], t[todo], lp[todo], lt[todo])
             acc = ub <= e[todo]
             res[todo[acc]] = True
             stg[todo[acc]] = STAGE_GREEDY_ACCEPT
@@ -630,8 +616,6 @@ def decide_pairs_buffers(
             stg[todo[acc]] = STAGE_DFD_ACCEPT
             todo = todo[~acc]
         if neg_reject and todo.size:
-            lp = lens_p[rows]
-            lt = lens_t[rows]
             drop = np.zeros(todo.size, dtype=bool)
             for ii, k in enumerate(todo):
                 drop[ii] = negfilter(p[k, : lp[k]], t[k, : lt[k]], float(e[k]))
@@ -646,96 +630,13 @@ def decide_pairs_buffers(
     return (out, stages) if return_stages else out
 
 
-def _gather_pair(fqx, oqx, fqy, oqy, ftx, otx, fty, oty, rows):
-    """Padded (B,N,2)/(B,M,2) stacks for the selected pair rows."""
-    wp = int((oqx[rows + 1] - oqx[rows]).max())
-    wt = int((otx[rows + 1] - otx[rows]).max())
-    p = np.stack(
-        [_padded_gather(fqx, oqx, rows, wp), _padded_gather(fqy, oqy, rows, wp)],
-        axis=-1,
-    )
-    t = np.stack(
-        [_padded_gather(ftx, otx, rows, wt), _padded_gather(fty, oty, rows, wt)],
-        axis=-1,
-    )
-    return p, t
-
-
-def etd_pairs_arrow(qxs, qys, xs, ys, chunk: int = 4096) -> np.ndarray:
-    """Batched equal-time distance (F8) straight from pyarrow list columns,
-    size-bucketed padded gathers — zero per-row Python objects."""
-    fqx, oqx = _list_buffers(qxs)
-    fqy, oqy = _list_buffers(qys)
-    ftx, otx = _list_buffers(xs)
-    fty, oty = _list_buffers(ys)
-    B = len(oqx) - 1
-    out = np.empty(B, dtype=np.float64)
-    if B == 0:
-        return out
-    order = np.argsort(np.diff(oqx) + np.diff(otx))
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        p, t = _gather_pair(fqx, oqx, fqy, oqy, ftx, otx, fty, oty, rows)
-        out[rows] = etd_batch(p, t)
-    return out
-
-
-def distance_pairs_arrow(
-    qxs,
-    qys,
-    xs,
-    ys,
-    chunk: int = 2048,
-    rel_tol: float = 1e-9,
-    abs_tol: float = 1e-12,
-) -> np.ndarray:
-    """Batched bisection distance straight from pyarrow list columns —
-    size-bucketed padded gathers feeding the lockstep bisection, same
-    zero-copy path as decide_pairs_arrow."""
-    fqx, oqx = _list_buffers(qxs)
-    fqy, oqy = _list_buffers(qys)
-    ftx, otx = _list_buffers(xs)
-    fty, oty = _list_buffers(ys)
-    B = len(oqx) - 1
-    out = np.empty(B, dtype=np.float64)
-    if B == 0:
-        return out
-    order = np.argsort(np.diff(oqx) + np.diff(otx))
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        p, t = _gather_pair(fqx, oqx, fqy, oqy, ftx, otx, fty, oty, rows)
-        out[rows] = _frechet_distance_padded(p, t, rel_tol, abs_tol)
-    return out
-
-
 def etd_pairs_buffers(
     bq: tuple, bt: tuple, qsel: np.ndarray, tsel: np.ndarray, chunk: int = 4096
 ) -> np.ndarray:
-    """``etd_pairs_arrow`` over raw list buffers with per-pair curve
-    indirection (the broadcast-pack attach shape, cf.
-    decide_pairs_buffers): pair i compares curve ``qsel[i]`` of bq
-    against curve ``tsel[i]`` of bt."""
-    fqx, oqx, fqy, oqy = bq
-    ftx, otx, fty, oty = bt
-    B = int(qsel.size)
-    out = np.empty(B, dtype=np.float64)
-    if B == 0:
-        return out
-    lens = (oqx[qsel + 1] - oqx[qsel]) + (otx[tsel + 1] - otx[tsel])
-    order = np.argsort(lens)
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        qr, tr = qsel[rows], tsel[rows]
-        wp = int((oqx[qr + 1] - oqx[qr]).max())
-        wt = int((otx[tr + 1] - otx[tr]).max())
-        p = np.stack(
-            [_padded_gather(fqx, oqx, qr, wp), _padded_gather(fqy, oqy, qr, wp)],
-            axis=-1,
-        )
-        t = np.stack(
-            [_padded_gather(ftx, otx, tr, wt), _padded_gather(fty, oty, tr, wt)],
-            axis=-1,
-        )
+    """Batched equal-time distance (F8) for pair i = curve ``qsel[i]`` of
+    bq vs curve ``tsel[i]`` of bt (see padded_pair_chunks)."""
+    out = np.empty(int(qsel.size), dtype=np.float64)
+    for rows, p, t, _, _ in padded_pair_chunks(bq, bt, qsel, tsel, chunk):
         out[rows] = etd_batch(p, t)
     return out
 
@@ -749,31 +650,12 @@ def distance_pairs_buffers(
     rel_tol: float = 1e-9,
     abs_tol: float = 1e-12,
 ) -> np.ndarray:
-    """``distance_pairs_arrow`` over raw list buffers with per-pair curve
-    indirection (broadcast-pack attach shape). Per-pair values are
+    """Batched bisection distance for pair i = curve ``qsel[i]`` of bq vs
+    curve ``tsel[i]`` of bt (see padded_pair_chunks). Per-pair values are
     independent of batch composition (every bisection step is elementwise
-    per pair), so results equal the arrow-column path exactly."""
-    fqx, oqx, fqy, oqy = bq
-    ftx, otx, fty, oty = bt
-    B = int(qsel.size)
-    out = np.empty(B, dtype=np.float64)
-    if B == 0:
-        return out
-    lens = (oqx[qsel + 1] - oqx[qsel]) + (otx[tsel + 1] - otx[tsel])
-    order = np.argsort(lens)
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        qr, tr = qsel[rows], tsel[rows]
-        wp = int((oqx[qr + 1] - oqx[qr]).max())
-        wt = int((otx[tr + 1] - otx[tr]).max())
-        p = np.stack(
-            [_padded_gather(fqx, oqx, qr, wp), _padded_gather(fqy, oqy, qr, wp)],
-            axis=-1,
-        )
-        t = np.stack(
-            [_padded_gather(ftx, otx, tr, wt), _padded_gather(fty, oty, tr, wt)],
-            axis=-1,
-        )
+    per pair), so results do not depend on how pairs are batched."""
+    out = np.empty(int(qsel.size), dtype=np.float64)
+    for rows, p, t, _, _ in padded_pair_chunks(bq, bt, qsel, tsel, chunk):
         out[rows] = _frechet_distance_padded(p, t, rel_tol, abs_tol)
     return out
 

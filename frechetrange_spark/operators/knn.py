@@ -38,38 +38,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from frechetrange_spark.sources.pack_store import ROW_SOURCES
 
-def _distance_kernel(batches):
-    import pyarrow as pa
 
-    from frechetrange_spark.kernels.batch import distance_pairs_arrow
+_BOUNDS_SCHEMA = "query_id long, traj_id long, lb double, etd double"
+_DIST_SCHEMA = "query_id long, traj_id long, distance double"
 
-    for rb in batches:
-        # 1e-6 relative tolerance = the reference's own kNN-style
-        # bisection (benchmark/test.py:96, eps=1E-6); ranks are stable
-        # well above it and it saves ~10 of ~37 decide sweeps per pair
-        dists = distance_pairs_arrow(
-            rb.column("q_xs"),
-            rb.column("q_ys"),
-            rb.column("xs"),
-            rb.column("ys"),
-            rel_tol=1e-6,
-        )
-        yield pa.RecordBatch.from_arrays(
-            [rb.column("query_id"), rb.column("traj_id"), pa.array(dists)],
-            ["query_id", "traj_id", "distance"],
-        )
+
+def _kernel_pass(pairs: DataFrame, kernel, schema: str) -> DataFrame:
+    """Round-robin repartition, then one Arrow kernel pass: pair rows are
+    cheap in bytes but expensive in CPU, so byte-based AQE coalescing
+    must not funnel them into few tasks."""
+    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
+    return pairs.repartition(n_slots).mapInArrow(kernel, schema=schema)
 
 
 def frechet_distances(pairs: DataFrame) -> DataFrame:
-    """(query_id, traj_id, distance) for pair rows carrying q_xs/q_ys/xs/ys.
-
-    Round-robin repartition before the kernel: pair rows are cheap in bytes
-    but expensive in CPU, so byte-based AQE coalescing must not funnel them
-    into few tasks."""
-    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
-    return pairs.repartition(n_slots).mapInArrow(
-        _distance_kernel, schema="query_id long, traj_id long, distance double"
+    """(query_id, traj_id, distance) for pair rows carrying q_xs/q_ys/xs/ys."""
+    return _kernel_pass(
+        pairs, _decide_distance_kernel(*ROW_SOURCES, decide=False), _DIST_SCHEMA
     )
 
 
@@ -300,41 +287,54 @@ def knn_candidates_grid(
     return _radius_prune(bounded, k)
 
 
-def _etd_kernel(batches):
-    """Batched ETD + endpoint lower bound per pair — padded-gather path
-    (kernels.batch), no per-row Python objects."""
-    import pyarrow as pa
+def _resolve_pair(q_spec, t_spec, rb):
+    """(query ids, traj ids, (query buffers, sel), (dataset buffers, sel))
+    of one Arrow batch of pairs, curves resolved via pack_store."""
+    from frechetrange_spark.sources.pack_store import curve_buffers, resolve_pack
 
-    from frechetrange_spark.kernels.batch import _list_buffers, etd_pairs_arrow
+    qid = rb.column("query_id").to_numpy(zero_copy_only=False)
+    tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
+    qpack, qsel = resolve_pack(q_spec, qid, rb)
+    tpack, tsel = resolve_pack(t_spec, tid, rb)
+    return qid, tid, (curve_buffers(qpack), qsel), (curve_buffers(tpack), tsel)
 
-    for rb in batches:
-        fqx, oqx = _list_buffers(rb.column("q_xs"))
-        fqy, oqy = _list_buffers(rb.column("q_ys"))
-        ftx, otx = _list_buffers(rb.column("xs"))
-        fty, oty = _list_buffers(rb.column("ys"))
-        B = len(oqx) - 1
-        etd = etd_pairs_arrow(
-            rb.column("q_xs"), rb.column("q_ys"), rb.column("xs"), rb.column("ys")
-        )
-        rows = np.arange(B)
-        lbs = np.maximum(
-            np.hypot(
-                fqx[oqx[rows]] - ftx[otx[rows]], fqy[oqy[rows]] - fty[oty[rows]]
-            ),
-            np.hypot(
-                fqx[oqx[rows + 1] - 1] - ftx[otx[rows + 1] - 1],
-                fqy[oqy[rows + 1] - 1] - fty[oty[rows + 1] - 1],
-            ),
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                rb.column("query_id"),
-                rb.column("traj_id"),
-                pa.array(lbs),
-                pa.array(etd),
-            ],
-            ["query_id", "traj_id", "lb", "etd"],
-        )
+
+def _etd_kernel(q_spec, t_spec):
+    """Batched ETD + endpoint lower bound per pair, curves from the
+    (query, dataset) pack sources — ids-only pair streams with broadcast
+    packs, or arrays riding the rows (pack_store.ROW_SOURCES)."""
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        from frechetrange_spark.kernels.batch import etd_pairs_buffers
+
+        for rb in batches:
+            _, _, (bq, qsel), (bt, tsel) = _resolve_pair(q_spec, t_spec, rb)
+            fqx, oqx, fqy, oqy = bq
+            ftx, otx, fty, oty = bt
+            etd = etd_pairs_buffers(bq, bt, qsel, tsel)
+            lbs = np.maximum(
+                np.hypot(
+                    fqx[oqx[qsel]] - ftx[otx[tsel]],
+                    fqy[oqy[qsel]] - fty[oty[tsel]],
+                ),
+                np.hypot(
+                    fqx[oqx[qsel + 1] - 1] - ftx[otx[tsel + 1] - 1],
+                    fqy[oqy[qsel + 1] - 1] - fty[oty[tsel + 1] - 1],
+                ),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("query_id"),
+                    rb.column("traj_id"),
+                    pa.array(lbs),
+                    pa.array(etd),
+                ],
+                ["query_id", "traj_id", "lb", "etd"],
+            )
+
+    return kernel
 
 
 def _etd_radius_prune(bounds: DataFrame, k: int) -> DataFrame:
@@ -369,75 +369,33 @@ def etd_prune(curves: DataFrame, queries: DataFrame, candidates: DataFrame, k: i
     Returns (query_id, traj_id, radius) — the radius rides along so the
     decide-at-radius prune (step 2c) can run without recomputing ETDs."""
     pairs = _pairs_with_arrays(curves, queries, candidates)
-    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
-    bounds = pairs.repartition(n_slots).mapInArrow(
-        _etd_kernel, schema="query_id long, traj_id long, lb double, etd double"
-    )
+    bounds = _kernel_pass(pairs, _etd_kernel(*ROW_SOURCES), _BOUNDS_SCHEMA)
     return _etd_radius_prune(bounds, k)
 
 
-def _pack_bufs(pack: dict) -> tuple:
-    """(flat_x, off_x, flat_y, off_y) of a broadcast curve pack."""
-    fx, ox = pack["cols"]["xs"]
-    fy, oy = pack["cols"]["ys"]
-    return (fx, ox, fy, oy)
+def _decide_distance_kernel(
+    q_spec, t_spec, decide: bool = True, distance: bool = True, rel_tol: float = 1e-6
+):
+    """Steps 2c + 3 in one Arrow pass, curves from the (query, dataset)
+    pack sources: (a) with ``decide``, one decision per pair at its
+    per-query ``radius`` column (the k-th smallest ETD) — a NO proves the
+    pair is outside the top k; (b) with ``distance``, the bisection
+    distance on the pairs still kept. Emits (query_id, traj_id[,
+    distance]). Per-pair results are independent of batch composition.
 
+    The decision runs at radius*(1+1e-12), not at the radius itself: the
+    radius is a k-th smallest ETD, i.e. sqrt(max d2), and eps*eps can
+    round a few ulps below that d2 — the bare decider then rejects pairs
+    whose true distance EQUALS the radius (translated duplicates: 119/2000
+    dropped at eps==ETD, 4/2000 at one ulp, 0 at 1e-12 relative — pinned
+    by test_radius_boundary_translated_duplicates). Widening keeps the
+    prune sound AND consistent with the distance kernel: it shares this
+    decider, so a NO at eps' > radius implies its bisection distance >=
+    eps' > radius — never a true top-k member.
 
-def _etd_kernel_pack(qb, tb):
-    """ETD + endpoint lower bound per id pair, arrays gathered from
-    broadcast curve packs (ids-only attach: the candidate stream and the
-    repartition shuffle carry 16 B/pair instead of the array payload —
-    same pattern as range_query's broadcast attach)."""
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        from frechetrange_spark.kernels.batch import etd_pairs_buffers
-        from frechetrange_spark.operators.range_query import _lookup
-
-        qpack, tpack = qb.value, tb.value
-        bq, bt = _pack_bufs(qpack), _pack_bufs(tpack)
-        fqx, oqx, fqy, oqy = bq
-        ftx, otx, fty, oty = bt
-        for rb in batches:
-            qid = rb.column("query_id").to_numpy(zero_copy_only=False)
-            tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            qsel = _lookup(qpack["ids"], qid)
-            tsel = _lookup(tpack["ids"], tid)
-            etd = etd_pairs_buffers(bq, bt, qsel, tsel)
-            lbs = np.maximum(
-                np.hypot(
-                    fqx[oqx[qsel]] - ftx[otx[tsel]],
-                    fqy[oqy[qsel]] - fty[oty[tsel]],
-                ),
-                np.hypot(
-                    fqx[oqx[qsel + 1] - 1] - ftx[otx[tsel + 1] - 1],
-                    fqy[oqy[qsel + 1] - 1] - fty[oty[tsel + 1] - 1],
-                ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column("query_id"),
-                    rb.column("traj_id"),
-                    pa.array(lbs),
-                    pa.array(etd),
-                ],
-                ["query_id", "traj_id", "lb", "etd"],
-            )
-
-    return kernel
-
-
-def _decide_distance_map(qb, tb, rel_tol: float = 1e-6):
-    """Fused step 2c + 3 over broadcast curve packs: ONE kernel pass that
-    (a) decides each surviving pair at its per-query radius (the k-th
-    smallest ETD, widened by 1e-12 relative exactly like
-    ``_decide_radius_kernel`` — see that docstring for the boundary
-    analysis) and (b) runs the bisection distance only on the accepted
-    pairs — the old plan shipped the decide survivors through another
-    join + repartition + Arrow pass before the distance kernel. Per-pair
-    results are independent of batch composition, so the distances equal
-    the unfused path bit-for-bit."""
+    ``rel_tol`` 1e-6 = the reference's own kNN-style bisection tolerance
+    (benchmark/test.py:96, eps=1E-6); ranks are stable well above it and
+    it saves ~10 of ~37 decide sweeps per pair."""
 
     def kernel(batches):
         import pyarrow as pa
@@ -446,66 +404,28 @@ def _decide_distance_map(qb, tb, rel_tol: float = 1e-6):
             decide_pairs_buffers,
             distance_pairs_buffers,
         )
-        from frechetrange_spark.operators.range_query import _lookup
 
-        qpack, tpack = qb.value, tb.value
-        bq, bt = _pack_bufs(qpack), _pack_bufs(tpack)
         for rb in batches:
-            qid = rb.column("query_id").to_numpy(zero_copy_only=False)
-            tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            qsel = _lookup(qpack["ids"], qid)
-            tsel = _lookup(tpack["ids"], tid)
-            radius = rb.column("radius").to_numpy(zero_copy_only=False)
-            eps = np.nextafter(radius * (1.0 + 1e-12), np.inf)
-            keep = decide_pairs_buffers(bq, bt, qsel, tsel, eps)
-            idx = np.nonzero(keep)[0]
-            dists = distance_pairs_buffers(
-                bq, bt, qsel[idx], tsel[idx], rel_tol=rel_tol
-            )
+            qid, tid, (bq, qsel), (bt, tsel) = _resolve_pair(q_spec, t_spec, rb)
+            idx = np.arange(rb.num_rows)
+            if decide:
+                radius = rb.column("radius").to_numpy(zero_copy_only=False)
+                eps = np.nextafter(radius * (1.0 + 1e-12), np.inf)
+                idx = np.nonzero(decide_pairs_buffers(bq, bt, qsel, tsel, eps))[0]
+            cols = [pa.array(qid[idx]), pa.array(tid[idx])]
+            if distance:
+                cols.append(
+                    pa.array(
+                        distance_pairs_buffers(
+                            bq, bt, qsel[idx], tsel[idx], rel_tol=rel_tol
+                        )
+                    )
+                )
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid[idx]),
-                    pa.array(tid[idx]),
-                    pa.array(dists),
-                ],
-                ["query_id", "traj_id", "distance"],
+                cols, ["query_id", "traj_id", "distance"][: len(cols)]
             )
 
     return kernel
-
-
-def _decide_radius_kernel(batches):
-    """Batched single decision per pair at its per-row radius column."""
-    import pyarrow as pa
-
-    from frechetrange_spark.kernels.batch import decide_pairs_arrow
-
-    for rb in batches:
-        # Decide at radius*(1+1e-12), not at the radius itself: the radius
-        # is a k-th smallest ETD, i.e. sqrt(max d2), and eps*eps can round
-        # a few ulps below that d2 — the bare decider then rejects pairs
-        # whose true distance EQUALS the radius (translated duplicates:
-        # 119/2000 dropped at eps==ETD, 4/2000 at one ulp, 0 at 1e-12
-        # relative — pinned by test_radius_boundary_translated_duplicates).
-        # Widening keeps the prune sound AND consistent with the distance
-        # kernel: it shares this decider, so a NO at eps' > radius implies
-        # its bisection distance >= eps' > radius — never a true top-k
-        # member. Previously only the ETD pre-accept's bit-reproducibility
-        # rescued these pairs; now the decision itself is safe.
-        radius = rb.column("radius").to_numpy(zero_copy_only=False)
-        radius = np.nextafter(radius * (1.0 + 1e-12), np.inf)
-        keep = decide_pairs_arrow(
-            rb.column("q_xs"),
-            rb.column("q_ys"),
-            rb.column("xs"),
-            rb.column("ys"),
-            radius,
-        )
-        idx = pa.array(np.nonzero(keep)[0])
-        yield pa.RecordBatch.from_arrays(
-            [rb.column("query_id").take(idx), rb.column("traj_id").take(idx)],
-            ["query_id", "traj_id"],
-        )
 
 
 def decide_radius_prune(
@@ -517,9 +437,10 @@ def decide_radius_prune(
     — one free-space sweep replaces the ~40-sweep bisection for every
     eliminated pair; only the accepted few get exact distances."""
     pairs = _pairs_with_arrays(curves, queries, survivors)
-    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
-    return pairs.repartition(n_slots).mapInArrow(
-        _decide_radius_kernel, schema="query_id long, traj_id long"
+    return _kernel_pass(
+        pairs,
+        _decide_distance_kernel(*ROW_SOURCES, distance=False),
+        "query_id long, traj_id long",
     )
 
 
@@ -545,8 +466,6 @@ def knn_frechet(
     queries: DataFrame,
     k: int,
     mesh: float | None = None,
-    eps0: float | None = None,
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """(query_id, traj_id, distance, rank): the k nearest trajectories per
     query by continuous Fréchet distance (self excluded). Ties break by
@@ -562,23 +481,21 @@ def knn_frechet(
     ``mesh``: home-cell size for the grid-prefiltered candidate stage
     (knn_candidates_grid — expanding Chebyshev ring probes; sublinear
     candidate streams on clustered corpora, identical top-k). ``None``
-    falls back to the all-pairs scalar bound pass. ``eps0``/
-    ``max_rounds`` are accepted for backward compatibility with the
-    earlier eps-doubling implementation and ignored.
+    falls back to the all-pairs scalar bound pass.
 
-    Refine attach (r06): when both curve tables' array payloads fit the
+    Refine attach: when both curve tables' array payloads fit the
     broadcast threshold, the ETD prune and the fused decide+distance
     stage gather arrays from broadcast curve packs (ids-only pair
-    streams — the range_query broadcast-attach pattern) and the decide
-    and distance kernels share one Arrow pass; past the threshold the
-    original per-pair array-join path runs unchanged. Identical results
-    either way (per-pair kernel outputs are batch-composition
-    independent)."""
+    streams — the range_query broadcast-attach pattern); past the
+    threshold the arrays ride the pair rows (_pairs_with_arrays). Both
+    run the same two kernels, and per-pair kernel outputs are
+    batch-composition independent, so results are identical either
+    way."""
     from frechetrange_spark.operators.range_query import (
         _broadcast_threshold,
-        _pack_broadcast,
         _payload_bytes_gated,
     )
+    from frechetrange_spark.sources.pack_store import pack_broadcast
 
     # curves feed three plan branches (scalar features, ETD arrays, final
     # arrays); eager localCheckpoint materializes the assembly lineage once
@@ -590,31 +507,31 @@ def knn_frechet(
         candidates = knn_candidates_grid(curves, queries, k, float(mesh))
     else:
         candidates = knn_candidates(curves, queries, k)
-    spark = curves.sparkSession
-    thr = _broadcast_threshold(spark)
-    packed = (
+    thr = _broadcast_threshold(curves.sparkSession)
+    if (
         thr > 0
         and _payload_bytes_gated(curves, thr) <= thr
         and _payload_bytes_gated(queries, thr) <= thr
-    )
-    n_slots = 2 * spark.sparkContext.defaultParallelism
-    if packed:
-        qb = _pack_broadcast(queries, 0)
-        tb = _pack_broadcast(curves, 0)
-        bounds = candidates.repartition(n_slots).mapInArrow(
-            _etd_kernel_pack(qb, tb),
-            schema="query_id long, traj_id long, lb double, etd double",
+    ):
+        sources = (
+            ("bcast", pack_broadcast(queries, 0)),
+            ("bcast", pack_broadcast(curves, 0)),
         )
-        survivors = _etd_radius_prune(bounds, k)
-        dists = survivors.repartition(n_slots).mapInArrow(
-            _decide_distance_map(qb, tb),
-            schema="query_id long, traj_id long, distance double",
-        )
+
+        def attach(pairs):
+            return pairs
+
     else:
-        survivors = etd_prune(curves, queries, candidates, k).localCheckpoint()
-        finalists = decide_radius_prune(curves, queries, survivors)
-        pairs = _pairs_with_arrays(curves, queries, finalists)
-        dists = frechet_distances(pairs)
+        sources = ROW_SOURCES
+
+        def attach(pairs):
+            return _pairs_with_arrays(curves, queries, pairs)
+
+    bounds = _kernel_pass(attach(candidates), _etd_kernel(*sources), _BOUNDS_SCHEMA)
+    survivors = _etd_radius_prune(bounds, k)
+    dists = _kernel_pass(
+        attach(survivors), _decide_distance_kernel(*sources), _DIST_SCHEMA
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("distance").asc(), F.col("traj_id").asc()
     )

@@ -23,13 +23,16 @@ the only Python, and it sees only survivors of the funnel.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from frechetrange_spark.operators.tiling import cell_coord, explode_neighbor_cells
+from frechetrange_spark.sources.pack_store import (
+    ROW_SOURCES,
+    pack_broadcast,
+    pack_columns,
+)
 
 _CORNERS = {
     "min_min": ("min_x", "min_y"),
@@ -369,180 +372,6 @@ def grid_candidates(
     return joined.filter(f2 & f1).withColumn("accept_f3", f3)
 
 
-def _simp_funnel_batch(
-    rb, eps: float, simp_levels: int, result, stage=None, chunk: int = 4096
-):
-    """F9 simplification funnel over one Arrow RecordBatch — shared by the
-    K5 and CFDQ refine kernels (the reference's bddm engine runs the same
-    funnel before EITHER full-resolution decider,
-    detail/bddm/spatial_hash.hpp:771-821). Per level i: compare the two
-    stored Agarwal simplifications with ETD and the exact decider at
-    eps -/+ (simpEps_Q + simpEps_T) — YES below the lower bound, NO above
-    the upper bound (exact by the triangle inequality), MAYBE falls
-    through. Accepts are written into ``result`` (and ``stage``); returns
-    the undecided row indices.
-
-    Rows are size-bucketed and processed in ``chunk``-row padded slices
-    (same scheme as decide_pairs_arrow): the padded working set stays
-    O(chunk x longest-curve-in-slice) regardless of the Arrow batch size,
-    so a wide-curve batch cannot balloon the matrices to batch x max-width."""
-    from frechetrange_spark.kernels.batch import (
-        _gather_pair,
-        _list_buffers,
-        decide_frechet_batch,
-        etd_batch,
-    )
-
-    und = np.arange(rb.num_rows, dtype=np.int64)
-    for i in range(simp_levels):
-        if und.size == 0:
-            break
-        q_eps_full = rb.column(f"q_s{i}_eps").to_numpy(zero_copy_only=False)
-        t_eps_full = rb.column(f"s{i}_eps").to_numpy(zero_copy_only=False)
-        fqx, oqx = _list_buffers(rb.column(f"q_s{i}_xs"))
-        fqy, oqy = _list_buffers(rb.column(f"q_s{i}_ys"))
-        ftx, otx = _list_buffers(rb.column(f"s{i}_xs"))
-        fty, oty = _list_buffers(rb.column(f"s{i}_ys"))
-        lens = (oqx[und + 1] - oqx[und]) + (otx[und + 1] - otx[und])
-        order = np.argsort(lens, kind="stable")
-        remaining = []
-        for s in range(0, und.size, chunk):
-            rows = und[order[s : s + chunk]]
-            sq, st = _gather_pair(fqx, oqx, fqy, oqy, ftx, otx, fty, oty, rows)
-            eps_l = eps - q_eps_full[rows] - t_eps_full[rows]
-            eps_u = eps + q_eps_full[rows] + t_eps_full[rows]
-            d = etd_batch(sq, st)
-            yes = d < eps_l  # strict, bddm:792
-            todo = np.nonzero(~yes & (eps_l > 0.0))[0]
-            if todo.size:
-                yes[todo] = decide_frechet_batch(sq[todo], st[todo], eps_l[todo])
-            no = np.zeros(rows.size, dtype=bool)
-            todo = np.nonzero(~yes & (eps_u > 0.0))[0]
-            if todo.size:
-                no[todo] = ~decide_frechet_batch(sq[todo], st[todo], eps_u[todo])
-            result[rows[yes]] = True
-            if stage is not None:
-                stage[rows[yes]] = f"simp{i}_yes"
-                stage[rows[~yes & no]] = f"simp{i}_no"
-            remaining.append(rows[~yes & ~no])
-        und = (
-            np.concatenate(remaining) if remaining else np.empty(0, dtype=np.int64)
-        )
-    return und
-
-
-def _pack_cols(simp_levels: int) -> tuple[list[str], list[str]]:
-    """(array columns, eps scalar columns) a curve pack carries."""
-    cols = ["xs", "ys"]
-    scal = []
-    for i in range(simp_levels):
-        cols += [f"s{i}_xs", f"s{i}_ys"]
-        scal.append(f"s{i}_eps")
-    return cols, scal
-
-
-def _pack_curves(df: DataFrame, simp_levels: int) -> dict:
-    """Driver-side pack of a curve table for the broadcast-attach refine:
-    every array column as (flat float64, offsets int64) buffers over the
-    curves SORTED by traj_id, plus the per-curve simplification eps
-    scalars. Only called when the table passed the broadcast-size gate
-    (_est_broadcast_bytes <= autoBroadcastJoinThreshold), so the collect
-    is bounded by the same budget a broadcast hash join would use."""
-    cols, scal = _pack_cols(simp_levels)
-    pdf = (
-        df.select("traj_id", *cols, *scal).orderBy("traj_id").toPandas()
-    )
-    ids = pdf["traj_id"].to_numpy(dtype=np.int64)
-    packed_cols = {}
-    for c in cols:
-        vals = pdf[c].to_numpy()
-        lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=len(vals))
-        off = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens)])
-        flat = (
-            np.concatenate(list(vals)).astype(np.float64, copy=False)
-            if len(vals)
-            else np.empty(0, dtype=np.float64)
-        )
-        packed_cols[c] = (flat, off)
-    return {
-        "ids": ids,
-        "cols": packed_cols,
-        "scal": {c: pdf[c].to_numpy(dtype=np.float64) for c in scal},
-    }
-
-
-# Broadcast curve packs, cached per (optimized-plan semantic hash,
-# simp_levels): repeated queries against the same index reuse ONE
-# broadcast instead of re-collecting and re-broadcasting the pack per
-# range_query_grid call, and eviction unpersists executor copies so a
-# long-lived session issuing many broadcast-attach queries cannot
-# accumulate broadcasts without bound.
-_PACK_CACHE: dict = {}
-# 8 entries: a working set of four concurrent query families, two packs
-# each (kNN's checkpoint-keyed packs are new users since r06 — with the
-# old cap of 4 they evicted the repeated range_query packs every suite
-# round, forcing a re-collect per query). Packs are ~5-15 MB broadcasts;
-# eviction unpersists executor copies.
-_PACK_CACHE_CAP = 8
-
-
-def _plan_key(df: DataFrame):
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().semanticHash())
-    except Exception:
-        return id(df)
-
-
-def _pack_broadcast(df: DataFrame, simp_levels: int):
-    """sc.broadcast of _pack_curves(df), LRU-cached (see _PACK_CACHE).
-
-    The cache key is the semantic hash of the PROJECTED plan (just the
-    columns the pack reads), so two DataFrames that differ only in
-    pack-irrelevant columns — e.g. a self-join's query side (no cell
-    columns) vs its index side — share one collected pack instead of
-    collecting and broadcasting the same curves twice. Each entry pins a
-    reference to its source DataFrame so the id(df) fallback key can
-    never alias a garbage-collected plan (a recycled CPython id would
-    otherwise serve a stale pack)."""
-    cols, scal = _pack_cols(simp_levels)
-    proj = df.select("traj_id", *cols, *scal)
-    key = (_plan_key(proj), simp_levels)
-    hit = _PACK_CACHE.pop(key, None)
-    if hit is not None:
-        _PACK_CACHE[key] = hit  # LRU refresh
-        return hit[0]
-    b = df.sparkSession.sparkContext.broadcast(_pack_curves(df, simp_levels))
-    _PACK_CACHE[key] = (b, proj)
-    while len(_PACK_CACHE) > _PACK_CACHE_CAP:
-        _PACK_CACHE.pop(next(iter(_PACK_CACHE)))[0].unpersist(blocking=False)
-    return b
-
-
-def clear_pack_cache(destroy: bool = False) -> None:
-    """Release every cached curve-pack broadcast (executor copies always;
-    driver values too with ``destroy=True`` — only safe once no lazy
-    DataFrame built against them will run again)."""
-    while _PACK_CACHE:
-        b = _PACK_CACHE.pop(next(iter(_PACK_CACHE)))[0]
-        b.destroy() if destroy else b.unpersist(blocking=False)
-
-
-def _lookup(ids: np.ndarray, vals: np.ndarray) -> np.ndarray:
-    """Sorted-id -> row-index resolution with a loud miss guard (a miss
-    would silently gather another curve's buffers). Degenerate empty
-    batches (no candidates to resolve) return an empty index array
-    instead of tripping the guard."""
-    if vals.size == 0:
-        return np.empty(0, dtype=np.int64)
-    idx = np.searchsorted(ids, vals)
-    if ids.size == 0:
-        raise KeyError("broadcast curve pack is missing candidate traj_ids")
-    idx = np.minimum(idx, ids.size - 1)
-    if not np.array_equal(ids[idx], vals):
-        raise KeyError("broadcast curve pack is missing candidate traj_ids")
-    return idx
-
-
 def _simp_funnel_pairs(
     qpack: dict,
     tpack: dict,
@@ -554,45 +383,46 @@ def _simp_funnel_pairs(
     stage=None,
     chunk: int = 4096,
 ):
-    """_simp_funnel_batch over broadcast curve packs: identical stage
-    semantics, but the simplification arrays are gathered from the shared
-    per-curve buffers via qsel/tsel instead of riding the pair rows."""
+    """F9 simplification funnel over one batch of pairs — shared by the
+    K5 and CFDQ refine kernels (the reference's bddm engine runs the same
+    funnel before EITHER full-resolution decider,
+    detail/bddm/spatial_hash.hpp:771-821). Pair i compares curve
+    ``qsel[i]`` of ``qpack`` with curve ``tsel[i]`` of ``tpack`` (see
+    sources.pack_store). Per level i: compare the two stored Agarwal
+    simplifications with ETD and the exact decider at
+    eps -/+ (simpEps_Q + simpEps_T) — YES below the lower bound, NO above
+    the upper bound (exact by the triangle inequality), MAYBE falls
+    through. Accepts are written into ``result`` (and ``stage``); returns
+    the undecided pair indices.
+
+    Pairs are size-bucketed and processed in ``chunk``-pair padded slices
+    (kernels.batch.padded_pair_chunks), so a wide-curve batch cannot
+    balloon the matrices to batch x max-width."""
     from frechetrange_spark.kernels.batch import (
-        _padded_gather,
         decide_frechet_batch,
         etd_batch,
+        padded_pair_chunks,
     )
+    from frechetrange_spark.sources.pack_store import curve_buffers
 
     und = np.arange(qsel.size, dtype=np.int64)
     for i in range(simp_levels):
         if und.size == 0:
             break
-        fqx, oqx = qpack["cols"][f"s{i}_xs"]
-        fqy, oqy = qpack["cols"][f"s{i}_ys"]
-        ftx, otx = tpack["cols"][f"s{i}_xs"]
-        fty, oty = tpack["cols"][f"s{i}_ys"]
         q_eps_all = qpack["scal"][f"s{i}_eps"]
         t_eps_all = tpack["scal"][f"s{i}_eps"]
-        lens = (oqx[qsel[und] + 1] - oqx[qsel[und]]) + (
-            otx[tsel[und] + 1] - otx[tsel[und]]
-        )
-        order = np.argsort(lens, kind="stable")
         remaining = []
-        for s in range(0, und.size, chunk):
-            rows = und[order[s : s + chunk]]
-            qr, tr = qsel[rows], tsel[rows]
-            wq = int((oqx[qr + 1] - oqx[qr]).max())
-            wt = int((otx[tr + 1] - otx[tr]).max())
-            sq = np.stack(
-                [_padded_gather(fqx, oqx, qr, wq), _padded_gather(fqy, oqy, qr, wq)],
-                axis=-1,
-            )
-            st = np.stack(
-                [_padded_gather(ftx, otx, tr, wt), _padded_gather(fty, oty, tr, wt)],
-                axis=-1,
-            )
-            eps_l = eps - q_eps_all[qr] - t_eps_all[tr]
-            eps_u = eps + q_eps_all[qr] + t_eps_all[tr]
+        for r, sq, st, _, _ in padded_pair_chunks(
+            curve_buffers(qpack, i),
+            curve_buffers(tpack, i),
+            qsel[und],
+            tsel[und],
+            chunk,
+            stable=True,
+        ):
+            rows = und[r]
+            eps_l = eps - q_eps_all[qsel[rows]] - t_eps_all[tsel[rows]]
+            eps_u = eps + q_eps_all[qsel[rows]] + t_eps_all[tsel[rows]]
             d = etd_batch(sq, st)
             yes = d < eps_l  # strict, bddm:792
             todo = np.nonzero(~yes & (eps_l > 0.0))[0]
@@ -622,10 +452,10 @@ def _refine_map(
     rev_greedy_accept: bool = False,
     dfd_accept: bool = False,
     stats: bool = False,
-    bcast=None,
+    sources=ROW_SOURCES,
 ):
     """Arrow-native refine: the exact decider (K5) batched over every pair
-    in each RecordBatch — list buffers are gathered into padded (B, N, 2)
+    in each RecordBatch — curve buffers are gathered into padded (B, N, 2)
     matrices with zero per-row Python objects (see kernels.batch).
 
     ``greedy_accept``/``neg_reject`` wire the bb filter pack (F4/F5,
@@ -645,45 +475,36 @@ def _refine_map(
     (:846-856). The whole funnel is batched per Arrow batch — no shuffles
     between stages.
 
-    ``SPARK_GRAFT_KERNEL_CHUNK`` (read at plan-build time on the driver)
-    overrides the padded-kernel chunk width; the default in
-    kernels.batch.decide_pairs_arrow is cache-size-bound, not
-    throughput-bound, so the knob exists for measurement, not tuning.
+    ``sources`` is the (query side, dataset side) pair of curve-pack
+    source specs each batch is resolved against
+    (sources.pack_store.resolve_pack):
 
-    With ``bcast`` (a (query_side, index_side) pair of attach SPECS) the
-    incoming batches carry ONLY (query_id, traj_id) id pairs — every
-    curve array and simplification eps is gathered via sorted-id lookup
-    from per-side packs instead of riding the pair rows, so the
-    candidate join, the repartition shuffle AND the JVM->Python Arrow
-    stream all move ~16 bytes per pair instead of the full
-    ~(4 x n_points x 8)-byte array payload per pair. Each spec is either
-    ``("bcast", broadcast)`` — the whole table packed in one SparkContext
-    broadcast (_pack_curves/_pack_broadcast) — or ``("disk", path)`` — a
-    co-partitioned curve-pack store (sources/pack_store): the worker
-    resolves the batch's unique ids to blocks via the store manifest and
-    gathers just those curves from mmapped npy blocks, so the big side
-    never transits the driver or a broadcast at all (the over-threshold
-    100-TB regime)."""
-    chunk = int(os.environ.get("SPARK_GRAFT_KERNEL_CHUNK", "0"))
+    - ``("rows", prefix)`` (the default, ROW_SOURCES) — the arrays ride
+      the pair rows as q_xs/q_ys/xs/ys (+ q_s{i}_*/s{i}_* funnel
+      columns).
+    - ``("bcast", broadcast)`` — the whole table packed in one
+      SparkContext broadcast (pack_store.pack_broadcast); the incoming
+      batches carry ONLY (query_id, traj_id), so the candidate join, the
+      repartition shuffle AND the JVM->Python Arrow stream all move ~16
+      bytes per pair instead of the ~(4 x n_points x 8)-byte array
+      payload.
+    - ``("disk", path)`` — a co-partitioned curve-pack store: the worker
+      resolves the batch's unique ids to blocks via the store manifest
+      and gathers just those curves from mmapped npy blocks, so the big
+      side never transits the driver or a broadcast at all (the
+      over-threshold 100-TB regime)."""
 
     def fn(batches):
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import (
             STAGE_NAMES,
-            decide_pairs_arrow,
             decide_pairs_buffers,
         )
-
-        def _resolve(spec, ids_arr):
-            kind, v = spec
-            if kind == "bcast":
-                pack = v.value
-            else:
-                from frechetrange_spark.sources.pack_store import gather_pack
-
-                pack = gather_pack(v, np.unique(ids_arr), simp_levels)
-            return pack, _lookup(pack["ids"], ids_arr)
+        from frechetrange_spark.sources.pack_store import (
+            curve_buffers,
+            resolve_pack,
+        )
 
         for rb in batches:
             B = rb.num_rows
@@ -691,58 +512,28 @@ def _refine_map(
             stage = np.full(B, "", dtype=object) if stats else None
             all_qid = rb.column("query_id").to_numpy(zero_copy_only=False)
             all_tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            if bcast is not None:
-                qpack, qsel = _resolve(bcast[0], all_qid)
-                tpack, tsel = _resolve(bcast[1], all_tid)
-                und = _simp_funnel_pairs(
-                    qpack, tpack, qsel, tsel, eps, simp_levels, result, stage,
-                    **({"chunk": chunk} if chunk else {}),
+            qpack, qsel = resolve_pack(sources[0], all_qid, rb, simp_levels)
+            tpack, tsel = resolve_pack(sources[1], all_tid, rb, simp_levels)
+            und = _simp_funnel_pairs(
+                qpack, tpack, qsel, tsel, eps, simp_levels, result, stage
+            )
+            if und.size:
+                # full-resolution fallback (ETD accept + optional F4/F5)
+                res, codes = decide_pairs_buffers(
+                    curve_buffers(qpack),
+                    curve_buffers(tpack),
+                    qsel[und],
+                    tsel[und],
+                    eps,
+                    greedy_accept=greedy_accept,
+                    neg_reject=neg_reject,
+                    rev_greedy_accept=rev_greedy_accept,
+                    dfd_accept=dfd_accept,
+                    return_stages=True,
                 )
-                if und.size:
-                    fqx, oqx = qpack["cols"]["xs"]
-                    fqy, oqy = qpack["cols"]["ys"]
-                    ftx, otx = tpack["cols"]["xs"]
-                    fty, oty = tpack["cols"]["ys"]
-                    res, codes = decide_pairs_buffers(
-                        (fqx, oqx, fqy, oqy),
-                        (ftx, otx, fty, oty),
-                        qsel[und],
-                        tsel[und],
-                        eps,
-                        greedy_accept=greedy_accept,
-                        neg_reject=neg_reject,
-                        rev_greedy_accept=rev_greedy_accept,
-                        dfd_accept=dfd_accept,
-                        return_stages=True,
-                        **({"chunk": chunk} if chunk else {}),
-                    )
-                    result[und] = res
-                    if stats:
-                        stage[und] = [STAGE_NAMES[c] for c in codes]
-            else:
-                und = _simp_funnel_batch(
-                    rb, eps, simp_levels, result, stage,
-                    **({"chunk": chunk} if chunk else {}),
-                )
-                if und.size:
-                    # full-resolution fallback (ETD accept + optional F4/F5)
-                    sub = rb.take(pa.array(und))
-                    res, codes = decide_pairs_arrow(
-                        sub.column("q_xs"),
-                        sub.column("q_ys"),
-                        sub.column("xs"),
-                        sub.column("ys"),
-                        eps,
-                        greedy_accept=greedy_accept,
-                        neg_reject=neg_reject,
-                        rev_greedy_accept=rev_greedy_accept,
-                        dfd_accept=dfd_accept,
-                        return_stages=True,
-                        **({"chunk": chunk} if chunk else {}),
-                    )
-                    result[und] = res
-                    if stats:
-                        stage[und] = [STAGE_NAMES[c] for c in codes]
+                result[und] = res
+                if stats:
+                    stage[und] = [STAGE_NAMES[c] for c in codes]
             if stats:
                 qid, tid, acc = all_qid, all_tid, result
                 stg = stage
@@ -880,6 +671,22 @@ def _broadcast_threshold(spark) -> int:
         return 32 * 1024 * 1024
 
 
+def _shared_levels(a_cols, b_cols) -> int:
+    """Number of simplification levels stored on both sides."""
+    n = 0
+    while f"s{n}_eps" in a_cols and f"s{n}_eps" in b_cols:
+        n += 1
+    return n
+
+
+def _pair_payload(columns, simp_levels: int) -> list[str]:
+    """The array columns a pair row carries for the rows source: both
+    sides' pack columns (pack_store.pack_columns), the query side's
+    q_-prefixed."""
+    cols, scal = pack_columns(columns, simp_levels)
+    return [f"q_{c}" for c in cols + scal] + cols + scal
+
+
 def range_query_grid(
     index_df: DataFrame,
     queries: DataFrame,
@@ -979,22 +786,7 @@ def range_query_grid(
                 attach = "pack"
     # funnel columns (Agarwal simplifications) ride along when the index
     # was enriched on BOTH sides
-    simp_levels = 0
-    extra = []
-    while (
-        f"s{simp_levels}_eps" in index_df.columns
-        and f"s{simp_levels}_eps" in queries.columns
-    ):
-        extra += [
-            f"q_s{simp_levels}_xs",
-            f"q_s{simp_levels}_ys",
-            f"q_s{simp_levels}_eps",
-            f"s{simp_levels}_xs",
-            f"s{simp_levels}_ys",
-            f"s{simp_levels}_eps",
-        ]
-        simp_levels += 1
-
+    simp_levels = _shared_levels(index_df.columns, queries.columns)
     ids_only = attach in ("broadcast", "pack")
     if ids_only:
         # candidates over scalar features only — no array bytes enter the
@@ -1021,96 +813,72 @@ def range_query_grid(
             F.lit("f3_accept").alias("stage"),
             F.lit(True).alias("accepted"),
         )
-    refine_cols = [
-        "query_id",
+    # ids-only arms: the curve arrays (and simplification levels) travel
+    # once per executor — as a python broadcast of packed buffers, or
+    # gathered from the mmapped curve-pack store — not once per candidate
+    # pair: the join, the repartition and the JVM->Python Arrow stream
+    # each move ~16 bytes/pair instead of the ~4 KB/pair array payload.
+    # Broadcast packs are LRU-cached per table (pack_broadcast): repeated
+    # queries reuse one broadcast, eviction unpersists executor copies.
+    if attach == "pack":
+        pack_path = meta.get("pack_path")
+        if not pack_path:
+            raise ValueError(
+                "attach='pack' needs meta['pack_path'] — write the "
+                "index with write_index(..., pack=True) or call "
+                "pack_store.write_pack and set meta['pack_path']"
+            )
+        # query side: broadcast-pack when it fits (the common 100-TB
+        # shape: huge dataset, bounded query set); otherwise gather from a
+        # disk pack — the INDEX's own store only for the self-join shape
+        # (symmetric=True: queries ARE the indexed curves) or an explicit
+        # meta['query_pack_path']. A foreign over-threshold query table
+        # must NOT silently reuse the index store: overlapping traj_id
+        # spaces would gather the WRONG curves for the query side and
+        # return silently wrong results (only ids absent from the store
+        # trip the loud lookup KeyError) — raise instead.
+        thr = _broadcast_threshold(spark)
+        if thr > 0 and _payload_bytes_gated(queries, thr) <= thr:
+            q_spec = ("bcast", pack_broadcast(queries, simp_levels))
+        elif symmetric:
+            q_spec = ("disk", pack_path)
+        elif meta.get("query_pack_path"):
+            q_spec = ("disk", meta["query_pack_path"])
+        else:
+            raise ValueError(
+                "attach='pack' with an over-broadcast-threshold query "
+                "table: reusing the index's pack store is only exact "
+                "for the self-join shape (symmetric=True). Write a "
+                "pack for the query table (pack_store.write_pack) and "
+                "set meta['query_pack_path'], or raise the broadcast "
+                "threshold."
+            )
+        sources = (q_spec, ("disk", pack_path))
+    elif attach == "broadcast":
+        sources = (
+            ("bcast", pack_broadcast(queries, simp_levels)),
+            ("bcast", pack_broadcast(index_df, simp_levels)),
+        )
+    else:
+        sources = ROW_SOURCES
+    to_refine = cand.filter(~F.col("accept_f3")).select(
+        F.col("q_traj_id").alias("query_id"),
         "traj_id",
-        F.col("q_xs"),
-        F.col("q_ys"),
-        "xs",
-        "ys",
-        *[F.col(c) for c in extra],
-    ]
+        *([] if ids_only else _pair_payload(index_df.columns, simp_levels)),
+    )
+    if symmetric:
+        to_refine = to_refine.filter(F.col("query_id") <= F.col("traj_id"))
+    if observations is not None and not funnel_stats:
+        observations["refine_input"] = Observation()
+        to_refine = to_refine.observe(
+            observations["refine_input"], F.count(F.lit(1)).alias("n")
+        )
     # Round-robin repartition before the Arrow kernel: the refine input is
     # small in BYTES but heavy in per-row CPU (free-space DP), so AQE's
     # byte-based coalescing would funnel it into one task. Explicit
     # repartition(n) is exempt from AQE coalescing and balances pair costs.
     n_slots = 2 * spark.sparkContext.defaultParallelism
-    refine_bcast = None
-    if ids_only:
-        ids = cand.filter(~F.col("accept_f3")).select(
-            F.col("q_traj_id").alias("query_id"), "traj_id"
-        )
-        if symmetric:
-            ids = ids.filter(F.col("query_id") <= F.col("traj_id"))
-        if observations is not None and not funnel_stats:
-            observations["refine_input"] = Observation()
-            ids = ids.observe(
-                observations["refine_input"], F.count(F.lit(1)).alias("n")
-            )
-        # ids-only all the way INTO the kernel: the curve arrays (and
-        # simplification levels) travel once per executor — as a python
-        # broadcast of packed buffers, or gathered from the mmapped
-        # curve-pack store — not once per candidate pair: the join, the
-        # repartition and the JVM->Python Arrow stream each move ~16
-        # bytes/pair instead of the ~4 KB/pair array payload. Broadcast
-        # packs are LRU-cached per table (_pack_broadcast): repeated
-        # queries reuse one broadcast, eviction unpersists executor
-        # copies.
-        if attach == "pack":
-            pack_path = meta.get("pack_path")
-            if not pack_path:
-                raise ValueError(
-                    "attach='pack' needs meta['pack_path'] — write the "
-                    "index with write_index(..., pack=True) or call "
-                    "pack_store.write_pack and set meta['pack_path']"
-                )
-            t_spec = ("disk", pack_path)
-            # query side: broadcast-pack when it fits (the common 100-TB
-            # shape: huge dataset, bounded query set); otherwise gather
-            # from a disk pack — the INDEX's own store only for the
-            # self-join shape (symmetric=True: queries ARE the indexed
-            # curves) or an explicit meta['query_pack_path']. A foreign
-            # over-threshold query table must NOT silently reuse the
-            # index store: overlapping traj_id spaces would gather the
-            # WRONG curves for the query side and return silently wrong
-            # results (only ids absent from the store trip the loud
-            # _lookup KeyError) — raise instead.
-            thr = _broadcast_threshold(spark)
-            if thr > 0 and _payload_bytes_gated(queries, thr) <= thr:
-                q_spec = ("bcast", _pack_broadcast(queries, simp_levels))
-            elif symmetric:
-                q_spec = ("disk", pack_path)
-            elif meta.get("query_pack_path"):
-                q_spec = ("disk", meta["query_pack_path"])
-            else:
-                raise ValueError(
-                    "attach='pack' with an over-broadcast-threshold query "
-                    "table: reusing the index's pack store is only exact "
-                    "for the self-join shape (symmetric=True). Write a "
-                    "pack for the query table (pack_store.write_pack) and "
-                    "set meta['query_pack_path'], or raise the broadcast "
-                    "threshold."
-                )
-            refine_bcast = (q_spec, t_spec)
-        else:
-            refine_bcast = (
-                ("bcast", _pack_broadcast(queries, simp_levels)),
-                ("bcast", _pack_broadcast(index_df, simp_levels)),
-            )
-        to_refine = ids.repartition(n_slots)
-    else:
-        to_refine = cand.filter(~F.col("accept_f3")).select(
-            F.col("q_traj_id").alias("query_id"), "traj_id", *refine_cols[2:]
-        )
-        if symmetric:
-            to_refine = to_refine.filter(F.col("query_id") <= F.col("traj_id"))
-        if observations is not None and not funnel_stats:
-            observations["refine_input"] = Observation()
-            to_refine = to_refine.observe(
-                observations["refine_input"], F.count(F.lit(1)).alias("n")
-            )
-        to_refine = to_refine.repartition(n_slots)
-    refined = to_refine.mapInArrow(
+    refined = to_refine.repartition(n_slots).mapInArrow(
         _refine_map(
             eps,
             simp_levels,
@@ -1120,7 +888,7 @@ def range_query_grid(
             rev_greedy_accept=rev_greedy_accept,
             dfd_accept=dfd_accept,
             stats=funnel_stats,
-            bcast=refine_bcast,
+            sources=sources,
         ),
         schema=REFINE_STATS_SCHEMA if funnel_stats else "query_id long, traj_id long",
     )
@@ -1139,7 +907,8 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
     runs the funnel before its full-resolution decide too,
     spatial_hash.hpp:771-856), then the CFDQ sparse decider (K6) with the
     dataset curve's stored portals (K9/O4, columns portal_src/dst/dist)
-    on the few funnel survivors. CFDQ's sparse interval walk is
+    on the few funnel survivors. Curves come from the rows source
+    (pack_store.ROW_SOURCES). CFDQ's sparse interval walk is
     control-flow-heavy and stays scalar per pair, but it now sees only
     funnel MAYBEs instead of every candidate; the per-survivor portals
     are passed as flat (srcs, dsts, dists) slices of the Arrow buffers
@@ -1152,16 +921,20 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
 
         from frechetrange_spark.kernels.batch import _list_buffers
         from frechetrange_spark.kernels.cfdq import decide_frechet_cfdq
+        from frechetrange_spark.sources.pack_store import (
+            curve_buffers,
+            resolve_pack,
+        )
 
         for rb in batches:
             B = rb.num_rows
             res = np.zeros(B, dtype=bool)
-            und = _simp_funnel_batch(rb, eps, simp_levels, res)
+            qpack, qsel = resolve_pack(ROW_SOURCES[0], None, rb, simp_levels)
+            tpack, tsel = resolve_pack(ROW_SOURCES[1], None, rb, simp_levels)
+            und = _simp_funnel_pairs(qpack, tpack, qsel, tsel, eps, simp_levels, res)
             if und.size:
-                fqx, oqx = _list_buffers(rb.column("q_xs"))
-                fqy, oqy = _list_buffers(rb.column("q_ys"))
-                ftx, otx = _list_buffers(rb.column("xs"))
-                fty, oty = _list_buffers(rb.column("ys"))
+                fqx, oqx, fqy, oqy = curve_buffers(qpack)
+                ftx, otx, fty, oty = curve_buffers(tpack)
                 fps, ops = _list_buffers(rb.column("portal_src"))
                 fpd, opd = _list_buffers(rb.column("portal_dst"))
                 fpw, opw = _list_buffers(rb.column("portal_dist"))
@@ -1211,7 +984,7 @@ def range_query_cfdq(
     must carry the portal columns (enrich_with_portals). Result sets
     equal the K5 funnel's (parity-tested); offered as an alternative
     engine — the batched K5 funnel stays the default."""
-    for c in ("portal_src", "portal_dst", "portal_dist"):
+    for c in PORTAL_COLS:
         if c not in index_df.columns:
             raise ValueError(f"index is missing portal column {c}; "
                              "run enrich_with_portals at build time")
@@ -1219,32 +992,12 @@ def range_query_cfdq(
     accepted = cand.filter("accept_f3").select(
         F.col("q_traj_id").alias("query_id"), "traj_id"
     )
-    simp_levels = 0
-    extra = []
-    while (
-        f"s{simp_levels}_eps" in cand.columns
-        and f"q_s{simp_levels}_eps" in cand.columns
-    ):
-        extra += [
-            f"q_s{simp_levels}_xs",
-            f"q_s{simp_levels}_ys",
-            f"q_s{simp_levels}_eps",
-            f"s{simp_levels}_xs",
-            f"s{simp_levels}_ys",
-            f"s{simp_levels}_eps",
-        ]
-        simp_levels += 1
+    simp_levels = _shared_levels(index_df.columns, queries.columns)
     to_refine = cand.filter(~F.col("accept_f3")).select(
         F.col("q_traj_id").alias("query_id"),
         "traj_id",
-        F.col("q_xs"),
-        F.col("q_ys"),
-        "xs",
-        "ys",
-        "portal_src",
-        "portal_dst",
-        "portal_dist",
-        *[F.col(c) for c in extra],
+        *PORTAL_COLS,
+        *_pair_payload(index_df.columns, simp_levels),
     )
     n_slots = 2 * index_df.sparkSession.sparkContext.defaultParallelism
     refined = to_refine.repartition(n_slots).mapInArrow(
@@ -1257,7 +1010,8 @@ def range_query_bruteforce(
     curves: DataFrame, queries: DataFrame, eps: float
 ) -> DataFrame:
     """Ground-truth oracle: decide every (query, trajectory) pair with the
-    exact kernel. No filters beyond what the decider itself implies."""
+    exact kernel, arrays riding the pair rows (the rows source). No
+    filters beyond what the decider itself implies."""
     pairs = _q(
         queries.select("traj_id", "xs", "ys"), "q_"
     ).crossJoin(curves.select("traj_id", "xs", "ys"))

@@ -1,24 +1,35 @@
-"""Co-partitioned on-disk curve-pack store: the >broadcast-threshold
-attach arm for the refine kernel (SURVEY §2.3 J4 at the 100-TB shape).
+"""Curve packs: the one way every refine kernel gets its curves.
 
-Problem: once a curve table's array payload exceeds the broadcast
-threshold, the only refine plan used to be ``attach="shuffle"`` — every
-candidate pair ships its full ~4 KB array payload through the candidate
-join, the repartition shuffle and the JVM->Python Arrow stream, where the
-ids-only broadcast arm ships 16 bytes. The reference (an in-memory
-single-node engine, e.g. detail/dv/grid.hpp keeps every curve resident)
-has no distributed analogue; the scale-safe middle is this store:
+A curve pack is ``{"ids", "cols", "scal"}``: every array column
+(xs/ys and the s{i}_xs/s{i}_ys simplification levels) as (flat float64,
+absolute offsets int64) buffers, one list row per curve, plus the
+per-curve s{i}_eps scalars. A refine kernel receives an Arrow batch of
+pairs, asks ``resolve_pack`` for each side's pack and per-pair row
+selectors, and runs the ``kernels.batch.*_buffers`` kernels on them. A
+side's source spec is one of three kinds:
 
-- ``write_pack`` materializes the curve arrays ONCE as traj_id
-  range-partitioned, id-sorted flat npy blocks (one block per Spark task
-  — a distributed write, nothing passes through the driver) plus a tiny
-  JSON manifest of [block dir, min_id, max_id].
-- the refine kernel (operators/range_query._refine_map with a
-  ``("disk", path)`` side spec) resolves each Arrow batch's candidate ids
-  to blocks via the manifest, np.load(mmap_mode="r")'s only the touched
-  blocks, and gathers just the needed curves into a compact in-memory
-  pack — the same (flat, offsets) interface the broadcast arm uses, so
-  the funnel and decider kernels are byte-identical across arms.
+- ``("bcast", broadcast)`` — the whole curve table packed on the driver
+  (``pack_curves``) and shipped in one SparkContext broadcast, LRU-cached
+  per table (``pack_broadcast``). The pair rows carry ids only.
+- ``("disk", path)`` — the co-partitioned on-disk store below, the
+  attach arm for tables past the broadcast threshold. ``gather_pack``
+  resolves the batch's unique ids to blocks via the manifest, mmaps only
+  the touched blocks and gathers just the needed curves. The pair rows
+  carry ids only.
+- ``("rows", prefix)`` — the batch's own ``{prefix}xs``/``{prefix}ys``
+  (and ``{prefix}s{i}_*``) columns, read zero-copy with identity
+  selectors: the shuffle arm, where arrays ride every pair row.
+
+Every kind yields the same buffers for the same curve, so the funnel and
+decider results are bit-identical across sources.
+
+The disk store: once a curve table's array payload exceeds the broadcast
+threshold, shipping arrays on every pair row costs ~4 KB per candidate
+pair through the join, the repartition and the JVM->Python Arrow stream.
+``write_pack`` materializes the curve arrays ONCE as traj_id
+range-partitioned, id-sorted flat npy blocks (one block per Spark task —
+a distributed write, nothing passes through the driver) plus a tiny JSON
+manifest of [block dir, min_id, max_id].
 
 Per-executor amortization: block mmaps are cached per python worker
 process (workers are reused across batches/tasks), and the OS page cache
@@ -26,7 +37,7 @@ shares the underlying bytes across workers on the same host — each
 executor reads a curve's bytes ~once per query, like the broadcast pack,
 instead of once per candidate pair like the shuffle arm. On a real
 cluster the store lives on the shared store (HDFS/S3 via a local block
-cache); in this sandbox it is a local directory.
+cache); locally it is a directory.
 
 Write atomicity under task retries: each attempt writes into its own
 ``block_<pid>_<attemptId>`` directory and the manifest — assembled on the
@@ -44,6 +55,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MANIFEST = "_manifest.json"
+
+# (query side, dataset side) source specs for pair rows that carry both
+# curves' arrays (q_xs/q_ys/xs/ys plus any simplification columns)
+ROW_SOURCES = (("rows", "q_"), ("rows", ""))
 
 
 def pack_columns(df_columns, simp_levels: int | None = None):
@@ -213,7 +228,7 @@ def _ragged_gather(flat, off, idx):
 
 
 def gather_pack(path: str, ids: np.ndarray, simp_levels: int) -> dict:
-    """Compact in-memory pack (same shape as range_query._pack_curves)
+    """Compact in-memory pack (same shape as ``pack_curves``)
     holding exactly the curves ``ids`` (sorted unique int64), gathered
     from the mmapped blocks the ids actually touch. Missing ids raise
     KeyError loudly (a silent miss would gather another curve)."""
@@ -264,3 +279,143 @@ def gather_pack(path: str, ids: np.ndarray, simp_levels: int) -> dict:
     for c in scal:
         out["scal"][c] = np.concatenate([p["scal"][c] for p in parts])
     return out
+
+
+# ---------------------------------------------------------------------------
+# broadcast packs (driver side) and the per-batch resolver (worker side)
+# ---------------------------------------------------------------------------
+
+
+def pack_curves(df: DataFrame, simp_levels: int) -> dict:
+    """Driver-side pack of a curve table for the broadcast source: every
+    array column as (flat float64, offsets int64) buffers over the curves
+    SORTED by traj_id, plus the per-curve simplification eps scalars.
+    Only called when the table passed the broadcast-size gate
+    (range_query._est_broadcast_bytes <= autoBroadcastJoinThreshold), so
+    the collect is bounded by the same budget a broadcast hash join would
+    use."""
+    cols, scal = pack_columns(df.columns, simp_levels)
+    pdf = df.select("traj_id", *cols, *scal).orderBy("traj_id").toPandas()
+    packed_cols = {}
+    for c in cols:
+        vals = pdf[c].to_numpy()
+        lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=len(vals))
+        off = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens)])
+        flat = (
+            np.concatenate(list(vals)).astype(np.float64, copy=False)
+            if len(vals)
+            else np.empty(0, dtype=np.float64)
+        )
+        packed_cols[c] = (flat, off)
+    return {
+        "ids": pdf["traj_id"].to_numpy(dtype=np.int64),
+        "cols": packed_cols,
+        "scal": {c: pdf[c].to_numpy(dtype=np.float64) for c in scal},
+    }
+
+
+# Broadcast curve packs, cached per (optimized-plan semantic hash,
+# simp_levels): repeated queries against the same index reuse ONE
+# broadcast instead of re-collecting and re-broadcasting the pack per
+# call, and eviction unpersists executor copies so a long-lived session
+# issuing many broadcast-attach queries cannot accumulate broadcasts
+# without bound. 8 entries: a working set of four concurrent query
+# families (range queries and kNN), two packs each. Packs are ~5-15 MB
+# broadcasts.
+_PACK_CACHE: dict = {}
+_PACK_CACHE_CAP = 8
+
+
+def _plan_key(df: DataFrame):
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().semanticHash())
+    except Exception:
+        return id(df)
+
+
+def pack_broadcast(df: DataFrame, simp_levels: int):
+    """sc.broadcast of pack_curves(df), LRU-cached (see _PACK_CACHE).
+
+    The cache key is the semantic hash of the PROJECTED plan (just the
+    columns the pack reads), so two DataFrames that differ only in
+    pack-irrelevant columns — e.g. a self-join's query side (no cell
+    columns) vs its index side — share one collected pack instead of
+    collecting and broadcasting the same curves twice. Each entry pins a
+    reference to its source DataFrame so the id(df) fallback key can
+    never alias a garbage-collected plan (a recycled CPython id would
+    otherwise serve a stale pack)."""
+    cols, scal = pack_columns(df.columns, simp_levels)
+    proj = df.select("traj_id", *cols, *scal)
+    key = (_plan_key(proj), simp_levels)
+    hit = _PACK_CACHE.pop(key, None)
+    if hit is not None:
+        _PACK_CACHE[key] = hit  # LRU refresh
+        return hit[0]
+    b = df.sparkSession.sparkContext.broadcast(pack_curves(df, simp_levels))
+    _PACK_CACHE[key] = (b, proj)
+    while len(_PACK_CACHE) > _PACK_CACHE_CAP:
+        _PACK_CACHE.pop(next(iter(_PACK_CACHE)))[0].unpersist(blocking=False)
+    return b
+
+
+def clear_pack_cache(destroy: bool = False) -> None:
+    """Release every cached curve-pack broadcast (executor copies always;
+    driver values too with ``destroy=True`` — only safe once no lazy
+    DataFrame built against them will run again)."""
+    while _PACK_CACHE:
+        b = _PACK_CACHE.pop(next(iter(_PACK_CACHE)))[0]
+        b.destroy() if destroy else b.unpersist(blocking=False)
+
+
+def lookup(ids: np.ndarray, vals: np.ndarray) -> np.ndarray:
+    """Sorted-id -> row-index resolution with a loud miss guard (a miss
+    would silently gather another curve's buffers). Degenerate empty
+    batches (no candidates to resolve) return an empty index array
+    instead of tripping the guard."""
+    if vals.size == 0:
+        return np.empty(0, dtype=np.int64)
+    idx = np.searchsorted(ids, vals)
+    if ids.size == 0:
+        raise KeyError("curve pack is missing candidate traj_ids")
+    idx = np.minimum(idx, ids.size - 1)
+    if not np.array_equal(ids[idx], vals):
+        raise KeyError("curve pack is missing candidate traj_ids")
+    return idx
+
+
+def _rows_pack(rb, prefix: str, simp_levels: int) -> dict:
+    """Pack view of one side's array columns riding an Arrow batch of
+    pairs: one list row per pair, zero-copy buffers."""
+    from frechetrange_spark.kernels.batch import _list_buffers
+
+    names = [n[len(prefix) :] for n in rb.schema.names if n.startswith(prefix)]
+    cols, scal = pack_columns(names, simp_levels)
+    return {
+        "ids": None,
+        "cols": {c: _list_buffers(rb.column(prefix + c)) for c in cols},
+        "scal": {
+            c: rb.column(prefix + c).to_numpy(zero_copy_only=False) for c in scal
+        },
+    }
+
+
+def resolve_pack(spec, ids: np.ndarray, rb, simp_levels: int = 0):
+    """(pack, sel) for one side of an Arrow batch of pairs: pair i reads
+    curve ``sel[i]`` of ``pack``. ``ids`` are that side's per-pair curve
+    ids; ``spec`` is a ("bcast" | "disk" | "rows", value) source (see the
+    module docstring)."""
+    kind, v = spec
+    if kind == "rows":
+        return _rows_pack(rb, v, simp_levels), np.arange(rb.num_rows, dtype=np.int64)
+    if kind == "bcast":
+        pack = v.value
+    else:
+        pack = gather_pack(v, np.unique(ids), simp_levels)
+    return pack, lookup(pack["ids"], ids)
+
+
+def curve_buffers(pack: dict, level: int | None = None) -> tuple:
+    """(flat_x, off_x, flat_y, off_y) of a pack's full-resolution curves,
+    or of simplification level ``level``."""
+    pre = "" if level is None else f"s{level}_"
+    return (*pack["cols"][f"{pre}xs"], *pack["cols"][f"{pre}ys"])

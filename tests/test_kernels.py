@@ -406,14 +406,14 @@ class TestDecidePairsBuffers:
     def test_lookup_miss_raises(self):
         import pytest
 
-        from frechetrange_spark.operators.range_query import _lookup
+        from frechetrange_spark.sources.pack_store import lookup
 
         ids = np.array([1, 5, 9], dtype=np.int64)
-        assert _lookup(ids, np.array([9, 1, 5])).tolist() == [2, 0, 1]
+        assert lookup(ids, np.array([9, 1, 5])).tolist() == [2, 0, 1]
         with pytest.raises(KeyError):
-            _lookup(ids, np.array([1, 7]))
+            lookup(ids, np.array([1, 7]))
         with pytest.raises(KeyError):
-            _lookup(np.empty(0, dtype=np.int64), np.array([1]))
+            lookup(np.empty(0, dtype=np.int64), np.array([1]))
 
 
 class TestUpperBoundAcceptFilters:

@@ -30,7 +30,7 @@ def test_radius_boundary_translated_duplicates():
     radius decision runs exactly at the boundary, where eps*eps =
     sqrt(d2)^2 rounds below d2 (empirically 119/2000 false rejects with
     the bare decider at eps==ETD, 4/2000 at one ulp). Pins the
-    1e-12-relative widening in _decide_radius_kernel so a future
+    1e-12-relative widening in _decide_distance_kernel so a future
     etd_accept / chunk-layout change can't silently drop true top-k
     members."""
     import numpy as np
@@ -51,7 +51,7 @@ def test_radius_boundary_translated_duplicates():
         return pa.array([row.tolist() for row in a], pa.list_(pa.float64()))
 
     args = (col(P[:, :, 0]), col(P[:, :, 1]), col(Q[:, :, 0]), col(Q[:, :, 1]))
-    # the exact widening _decide_radius_kernel applies, bare decider
+    # the exact widening _decide_distance_kernel applies, bare decider
     widened = np.nextafter(radius * (1.0 + 1e-12), np.inf)
     keep = decide_pairs_arrow(*args, widened, etd_accept=False)
     assert keep.all(), f"{int((~keep).sum())}/{n} boundary pairs dropped"
@@ -59,8 +59,10 @@ def test_radius_boundary_translated_duplicates():
     reject = decide_pairs_arrow(*args, radius * 0.999, etd_accept=False)
     assert not reject.any()
 
-    # drive the actual kernel too (it applies the widening internally)
-    from frechetrange_spark.operators.knn import _decide_radius_kernel
+    # drive the actual kernel too (it applies the widening internally),
+    # decide-only over arrays riding the rows
+    from frechetrange_spark.operators.knn import _decide_distance_kernel
+    from frechetrange_spark.sources.pack_store import ROW_SOURCES
 
     rb = pa.RecordBatch.from_arrays(
         [
@@ -71,7 +73,8 @@ def test_radius_boundary_translated_duplicates():
         ],
         ["query_id", "traj_id", "q_xs", "q_ys", "xs", "ys", "radius"],
     )
-    out = list(_decide_radius_kernel(iter([rb])))
+    kernel = _decide_distance_kernel(*ROW_SOURCES, distance=False)
+    out = list(kernel(iter([rb])))
     assert sum(b.num_rows for b in out) == n
 
 
@@ -112,7 +115,7 @@ def test_grid_prefilter_identical_and_sublinear(spark):
 
 def test_knn_exact(spark, corpus):
     queries = corpus.filter(F.col("traj_id") % 150 == 0)
-    got = knn_frechet(corpus, queries, k=K, mesh=15.0, eps0=2.0).toPandas()
+    got = knn_frechet(corpus, queries, k=K, mesh=15.0).toPandas()
 
     # brute force: all-pairs distances, top-k in pandas
     all_pairs = (
@@ -139,3 +142,29 @@ def test_knn_exact(spark, corpus):
         r["traj_id"] for r in queries.select("traj_id").collect()
     }
     assert (got.groupby("query_id").size() == K).all()
+
+
+def test_knn_past_broadcast_threshold(spark, corpus):
+    """Past the broadcast threshold the arrays ride the pair rows instead
+    of broadcast curve packs; ids, ranks and distances must be
+    bit-identical to the broadcast-pack run."""
+    from frechetrange_spark.operators.range_query import _payload_bytes_gated
+
+    queries = corpus.filter(F.col("traj_id") % 150 == 0)
+    key = ["query_id", "rank"]
+    packed = knn_frechet(corpus, queries, k=K, mesh=15.0).toPandas()
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1k")
+    try:
+        assert _payload_bytes_gated(corpus, 1024) > 1024
+        rows = knn_frechet(corpus, queries, k=K, mesh=15.0).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    packed = packed.sort_values(key).reset_index(drop=True)
+    rows = rows.sort_values(key).reset_index(drop=True)
+    assert len(packed) == len(rows) > 0
+    assert list(rows["query_id"]) == list(packed["query_id"])
+    assert list(rows["traj_id"]) == list(packed["traj_id"])
+    assert list(rows["rank"]) == list(packed["rank"])
+    assert (rows["distance"].to_numpy() == packed["distance"].to_numpy()).all()

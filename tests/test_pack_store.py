@@ -7,14 +7,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from frechetrange_spark.operators.range_query import (
-    _pack_curves,
     build_grid_index,
     range_query_grid,
 )
 from frechetrange_spark.operators.simplifications import (
     enrich_with_simplifications,
 )
-from frechetrange_spark.sources.pack_store import gather_pack, write_pack
+from frechetrange_spark.sources.pack_store import (
+    gather_pack,
+    pack_curves,
+    write_pack,
+)
 from frechetrange_spark.sources.trajectories import (
     assemble_curves,
     trajectory_points,
@@ -35,12 +38,12 @@ def enriched(spark):
 
 def test_write_gather_roundtrip(spark, enriched, tmp_path):
     """gather_pack over the on-disk blocks reproduces the driver-side
-    broadcast pack (_pack_curves) buffer-for-buffer, for the full id set
+    broadcast pack (pack_curves) buffer-for-buffer, for the full id set
     and for scattered subsets crossing block boundaries."""
     path = str(tmp_path / "pack")
     man = write_pack(enriched, path, n_blocks=7)
     assert len(man["blocks"]) >= 1
-    ref = _pack_curves(enriched, 2)
+    ref = pack_curves(enriched, 2)
     for ids in (ref["ids"], ref["ids"][::5], ref["ids"][-3:]):
         got = gather_pack(path, np.asarray(ids), 2)
         assert np.array_equal(got["ids"], ids)

@@ -153,6 +153,67 @@ def test_compaction_restores_o1_layout(spark, tmp_path):
     curves.unpersist()
 
 
+def _index_crashed_between_renames(spark, tmp_path, rewrite_finished):
+    """A write_index layout left the way a crash between compact_index's
+    two renames leaves it: the data dir moved to ``._old`` and the
+    rewrite in ``._compact`` (holding Spark's _SUCCESS marker only when
+    the rewrite finished; an unfinished one here also lacks a part file).
+    Returns (path, sorted traj_ids of the index)."""
+    import glob
+    import shutil
+
+    from frechetrange_spark.sources.index_table import write_index
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    curves = assemble_curves(points_from_text(docs))
+    idx, meta = build_grid_index(curves, 15.0, corner="min_min", auto_salt=False)
+    path = str(tmp_path / "index")
+    write_index(idx.repartition(4), path, meta)
+    data = os.path.join(path, "data")
+    want = sorted(r["traj_id"] for r in idx.select("traj_id").collect())
+    shutil.copytree(data, data + "._compact")
+    os.rename(data, data + "._old")
+    if not rewrite_finished:
+        os.remove(os.path.join(data + "._compact", "_SUCCESS"))
+        os.remove(sorted(glob.glob(data + "._compact/part-*"))[0])
+    return path, want
+
+
+def _traj_ids(spark, path):
+    from frechetrange_spark.sources.index_table import read_index
+
+    idx, _ = read_index(spark, path)
+    return sorted(r["traj_id"] for r in idx.select("traj_id").collect())
+
+
+def test_compaction_rerun_adopts_finished_rewrite(spark, tmp_path):
+    """Crash after the rewrite finished, between the two renames: a rerun
+    adopts ``._compact`` and compacts again — no rows lost, no siblings
+    left."""
+    from frechetrange_spark.sources.index_table import compact_index
+
+    path, want = _index_crashed_between_renames(spark, tmp_path, True)
+    compact_index(spark, path)
+    assert _traj_ids(spark, path) == want
+    data = os.path.join(path, "data")
+    assert not os.path.exists(data + "._old")
+    assert not os.path.exists(data + "._compact")
+
+
+def test_compaction_rerun_restores_old_data(spark, tmp_path):
+    """Crash with the data dir renamed away and no finished rewrite: a
+    rerun renames ``._old`` back (the partial ``._compact`` is discarded)
+    and compacts — no rows lost."""
+    from frechetrange_spark.sources.index_table import compact_index
+
+    path, want = _index_crashed_between_renames(spark, tmp_path, False)
+    compact_index(spark, path)
+    assert _traj_ids(spark, path) == want
+    data = os.path.join(path, "data")
+    assert not os.path.exists(data + "._old")
+    assert not os.path.exists(data + "._compact")
+
+
 def test_checkpoint_resume_skips_completed_stage(spark, tmp_path):
     root = str(tmp_path / "pipe")
     calls = {"n": 0}
