@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from frechetrange_spark.sources.pack_store import ROW_SOURCES
+from frechetrange_spark.sources.pack_store import ROW_SOURCES, choose_source
 
 
 _BOUNDS_SCHEMA = "query_id long, traj_id long, lb double, etd double"
@@ -445,20 +445,29 @@ def decide_radius_prune(
 
 
 def _pairs_with_arrays(
-    curves: DataFrame, queries: DataFrame, pair_ids: DataFrame
+    curves: DataFrame,
+    queries: DataFrame,
+    pair_ids: DataFrame,
+    sources=ROW_SOURCES,
 ) -> DataFrame:
-    """Attach both curves' arrays to the pair list; extra ``pair_ids``
-    columns (e.g. a per-pair radius) ride through."""
+    """Attach the arrays of every side whose source is ``rows`` to the pair
+    list (q_xs/q_ys for the query side, xs/ys for the dataset side); extra
+    ``pair_ids`` columns (e.g. a per-pair radius) ride through. Sides read
+    from a pack add nothing: the pair rows stay ids-only."""
     extra = [c for c in pair_ids.columns if c not in ("query_id", "traj_id")]
-    q = queries.select(
-        F.col("traj_id").alias("query_id"),
-        F.col("xs").alias("q_xs"),
-        F.col("ys").alias("q_ys"),
-    )
-    t = curves.select("traj_id", "xs", "ys")
-    return pair_ids.join(F.broadcast(q), "query_id").join(t, "traj_id").select(
-        "query_id", "traj_id", "q_xs", "q_ys", "xs", "ys", *extra
-    )
+    arrays = []
+    if sources[0][0] == "rows":
+        q = queries.select(
+            F.col("traj_id").alias("query_id"),
+            F.col("xs").alias("q_xs"),
+            F.col("ys").alias("q_ys"),
+        )
+        pair_ids = pair_ids.join(F.broadcast(q), "query_id")
+        arrays += ["q_xs", "q_ys"]
+    if sources[1][0] == "rows":
+        pair_ids = pair_ids.join(curves.select("traj_id", "xs", "ys"), "traj_id")
+        arrays += ["xs", "ys"]
+    return pair_ids.select("query_id", "traj_id", *arrays, *extra)
 
 
 def knn_frechet(
@@ -483,20 +492,14 @@ def knn_frechet(
     candidate streams on clustered corpora, identical top-k). ``None``
     falls back to the all-pairs scalar bound pass.
 
-    Refine attach: when both curve tables' array payloads fit the
-    broadcast threshold, the ETD prune and the fused decide+distance
-    stage gather arrays from broadcast curve packs (ids-only pair
-    streams — the range_query broadcast-attach pattern); past the
-    threshold the arrays ride the pair rows (_pairs_with_arrays). Both
-    run the same two kernels, and per-pair kernel outputs are
-    batch-composition independent, so results are identical either
-    way."""
-    from frechetrange_spark.operators.range_query import (
-        _broadcast_threshold,
-        _payload_bytes_gated,
-    )
-    from frechetrange_spark.sources.pack_store import pack_broadcast
-
+    Refine attach: each side's curves reach the ETD prune and the fused
+    decide+distance stage from the source ``pack_store.choose_source``
+    picks for it — a broadcast curve pack when that table's array payload
+    fits the broadcast threshold (the pair stream stays ids-only for that
+    side), else its arrays ride the pair rows (_pairs_with_arrays). Both
+    stages run the same two kernels either way, and per-pair kernel
+    outputs are batch-composition independent, so results are
+    identical."""
     # curves feed three plan branches (scalar features, ETD arrays, final
     # arrays); eager localCheckpoint materializes the assembly lineage once
     # and its blocks are GC-cleaned with the DataFrame — nothing left for
@@ -507,30 +510,17 @@ def knn_frechet(
         candidates = knn_candidates_grid(curves, queries, k, float(mesh))
     else:
         candidates = knn_candidates(curves, queries, k)
-    thr = _broadcast_threshold(curves.sparkSession)
-    if (
-        thr > 0
-        and _payload_bytes_gated(curves, thr) <= thr
-        and _payload_bytes_gated(queries, thr) <= thr
-    ):
-        sources = (
-            ("bcast", pack_broadcast(queries, 0)),
-            ("bcast", pack_broadcast(curves, 0)),
-        )
-
-        def attach(pairs):
-            return pairs
-
-    else:
-        sources = ROW_SOURCES
-
-        def attach(pairs):
-            return _pairs_with_arrays(curves, queries, pairs)
-
-    bounds = _kernel_pass(attach(candidates), _etd_kernel(*sources), _BOUNDS_SCHEMA)
+    sources = (choose_source(queries, "q_"), choose_source(curves, ""))
+    bounds = _kernel_pass(
+        _pairs_with_arrays(curves, queries, candidates, sources),
+        _etd_kernel(*sources),
+        _BOUNDS_SCHEMA,
+    )
     survivors = _etd_radius_prune(bounds, k)
     dists = _kernel_pass(
-        attach(survivors), _decide_distance_kernel(*sources), _DIST_SCHEMA
+        _pairs_with_arrays(curves, queries, survivors, sources),
+        _decide_distance_kernel(*sources),
+        _DIST_SCHEMA,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("distance").asc(), F.col("traj_id").asc()

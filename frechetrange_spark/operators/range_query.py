@@ -27,19 +27,17 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from frechetrange_spark.operators.tiling import cell_coord, explode_neighbor_cells
+from frechetrange_spark.operators.tiling import (
+    CORNERS,
+    cell_coord,
+    explode_neighbor_cells,
+)
 from frechetrange_spark.sources.pack_store import (
     ROW_SOURCES,
-    pack_broadcast,
+    choose_source,
+    est_payload_bytes,
     pack_columns,
 )
-
-_CORNERS = {
-    "min_min": ("min_x", "min_y"),
-    "min_max": ("min_x", "max_y"),
-    "max_min": ("max_x", "min_y"),
-    "max_max": ("max_x", "max_y"),
-}
 
 
 def corner_costs(curves: DataFrame, mesh: float) -> DataFrame:
@@ -55,7 +53,7 @@ def corner_costs(curves: DataFrame, mesh: float) -> DataFrame:
                 cell_coord(F.col(cx), mesh).alias("cx"),
                 cell_coord(F.col(cy), mesh).alias("cy"),
             )
-            for name, (cx, cy) in _CORNERS.items()
+            for name, (cx, cy) in CORNERS.items()
         ]
     )
     return (
@@ -96,9 +94,7 @@ def mesh_costs(
 
     cost = pairs + exploded; two cheap aggregation jobs per candidate,
     run once at build time."""
-    from frechetrange_spark.operators.tiling import explode_neighbor_cells
-
-    cx_col, cy_col = _CORNERS[corner]
+    cx_col, cy_col = CORNERS[corner]
     scalars = curves.select(cx_col, cy_col)
     out = []
     for m in candidates:
@@ -168,8 +164,8 @@ def choose_salt(
     one shuffle partition owns the hottest cell and must produce ~top²
     candidate pairs (self-join shape) while a balanced partition produces
     Σcnt²/parallelism — AQE cannot split it because the hot cell is small
-    in BYTES (scripts/bench_skew.py). Σcnt² is the same A4 statistic the
-    corner argmin uses. Salt when the hot cell's pair share exceeds
+    in BYTES (BENCH.md, hot-cell skew). Σcnt² is the same A4 statistic
+    the corner argmin uses. Salt when the hot cell's pair share exceeds
     ``trigger`` balanced partitions AND is big enough in absolute terms
     (top >= min_hot_rows, i.e. >= 1M pairs) that the salted plan's extra
     query-side duplication pays for itself; salt ~ the imbalance ratio,
@@ -228,9 +224,9 @@ def build_grid_index(
     so hot-cell corpora get the skew split without any manual flag
     (None on uniform corpora: plan unchanged). Meta also carries
     ``payload_bytes`` (the estimated broadcast size of the array payload,
-    _est_broadcast_bytes) so ``range_query_grid(attach="auto")`` can pick
-    its attach arm from build-time stats instead of re-scanning the
-    array columns per query. At scale, write ``index_df``
+    pack_store.est_payload_bytes) so ``range_query_grid`` can choose the
+    dataset side's curve source from build-time stats instead of
+    re-scanning the array columns per query. At scale, write ``index_df``
     partitioned/bucketed by (cell_x, cell_y) so the query join prunes
     partitions (sources/index_table.py persists meta too).
 
@@ -255,7 +251,7 @@ def build_grid_index(
         mesh = choose_mesh(curves, float(eps), mesh_candidates, corner)
     if corner is None:
         corner = choose_corner(curves, mesh)
-    cx_col, cy_col = _CORNERS[corner]
+    cx_col, cy_col = CORNERS[corner]
     index_df = curves.withColumn(
         "cell_x", cell_coord(F.col(cx_col), mesh)
     ).withColumn("cell_y", cell_coord(F.col(cy_col), mesh))
@@ -270,11 +266,7 @@ def build_grid_index(
     # payload_bytes broadcast estimate share a single job over the curve
     # table instead of two full scans (guide §1.2: don't compute things
     # twice). Semantics of both statistics are unchanged.
-    size_cols = ["xs"]
-    i = 0
-    while f"s{i}_xs" in index_df.columns:
-        size_cols.append(f"s{i}_xs")
-        i += 1
+    size_cols = [c for c in pack_columns(index_df.columns)[0] if c.endswith("xs")]
     per_cell = index_df.groupBy("cell_x", "cell_y").agg(
         F.count("*").alias("cnt"),
         *[F.sum(F.size(c)).alias(f"_p{j}") for j, c in enumerate(size_cols)],
@@ -292,7 +284,7 @@ def build_grid_index(
             index_df.sparkSession.sparkContext.defaultParallelism,
         )
     pts = sum(int(row[f"_p{j}"] or 0) for j in range(len(size_cols)))
-    meta["payload_bytes"] = pts * 16 * 3 + int(row["n"] or 0) * 64
+    meta["payload_bytes"] = est_payload_bytes(pts, int(row["n"] or 0))
     return index_df, meta
 
 
@@ -323,7 +315,7 @@ def grid_candidates(
     mesh, corner = meta["mesh"], meta["corner"]
     if salt is None:
         salt = meta.get("salt")
-    cx_col, cy_col = _CORNERS[corner]
+    cx_col, cy_col = CORNERS[corner]
     qexp = explode_neighbor_cells(
         _q(queries, "q_"), f"q_{cx_col}", f"q_{cy_col}", mesh, eps
     )
@@ -582,93 +574,17 @@ PORTAL_COLS = ("portal_src", "portal_dst", "portal_dist")
 
 
 def _array_cols(df: DataFrame) -> list[str]:
-    """The per-curve array payload columns: xs/ys plus any simplification
-    level arrays (s{i}_xs/s{i}_ys) and their eps scalars, plus the CFDQ
-    portal columns (unused by the K5 refine — a portal-enriched index in
-    broadcast-attach mode must not ship them through the candidate
-    join)."""
-    out = []
-    for c in df.columns:
-        if c in ("xs", "ys") or c in PORTAL_COLS:
-            out.append(c)
-        elif c.startswith("s") and (
-            c.endswith("_xs") or c.endswith("_ys") or c.endswith("_eps")
-        ):
-            out.append(c)
-    return out
-
-
-def _est_broadcast_bytes(df: DataFrame) -> int:
-    """Estimated in-memory broadcast size of a curve table's array payload:
-    16 bytes per (x, y) point across the full-resolution arrays and every
-    stored simplification level (exact: sums the list sizes), times a 3x
-    HashedRelation overhead factor, plus per-row slack."""
-    aggs = [F.sum(F.size("xs")).alias("p")]
-    i = 0
-    while f"s{i}_xs" in df.columns:
-        aggs.append(F.sum(F.size(f"s{i}_xs")).alias(f"p{i}"))
-        i += 1
-    aggs.append(F.count("*").alias("n"))
-    row = df.agg(*aggs).collect()[0]
-    pts = sum(int(row[k] or 0) for k in row.asDict() if k != "n")
-    return pts * 16 * 3 + int(row["n"] or 0) * 64
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's own size estimate for the plan (file-size-based for
-    parquet scans) — free: no job runs. None when the JVM handle doesn't
-    expose stats (e.g. a mocked session)."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().longValue()
-        )
-    except Exception:
-        return None
-
-
-def _payload_bytes_gated(df: DataFrame, thr: int) -> int:
-    """_est_broadcast_bytes with a known-large short-circuit: when
-    Catalyst's free plan-size estimate already exceeds 8x the broadcast
-    threshold, skip the full array-column scan and report the plan size
-    (any value > thr suffices — on-disk parquet of incompressible float
-    trajectories is ~1/3 the in-memory payload, so 8x leaves a wide
-    safety margin against compression). Keeps ``attach='auto'`` from
-    paying a full pass over a 100-TB table just to conclude 'shuffle'."""
-    plan_bytes = _plan_size_bytes(df)
-    if plan_bytes is not None and plan_bytes > 8 * thr:
-        return plan_bytes
-    return _est_broadcast_bytes(df)
-
-
-_BYTE_SUFFIXES = {
-    "k": 1024,
-    "m": 1024**2,
-    "g": 1024**3,
-    "t": 1024**4,
-    "p": 1024**5,
-}
-
-
-def _parse_byte_string(raw: str) -> int:
-    """Spark-style byte string: bare bytes or a k/m/g/t/p suffix with an
-    optional trailing 'b' (JavaUtils.byteStringAsBytes semantics: '10m',
-    '64K', '1gb'), case-insensitive."""
-    s = raw.strip().lower()
-    mult = 1
-    if s.endswith("b") and len(s) > 1 and s[-2] in _BYTE_SUFFIXES:
-        s = s[:-1]
-    if s and s[-1] in _BYTE_SUFFIXES:
-        mult = _BYTE_SUFFIXES[s[-1]]
-        s = s[:-1]
-    return int(s) * mult
-
-
-def _broadcast_threshold(spark) -> int:
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "33554432")
-    try:
-        return max(_parse_byte_string(raw), 0)
-    except ValueError:
-        return 32 * 1024 * 1024
+    """The per-curve array columns: xs/ys, the simplification level arrays
+    (s{i}_xs/s{i}_ys) and the CFDQ portal columns (unused by the K5
+    refine — a portal-enriched index must not ship them through the
+    candidate join when its curves come from a pack)."""
+    return [
+        c
+        for c in df.columns
+        if c in ("xs", "ys")
+        or c in PORTAL_COLS
+        or (c.startswith("s") and (c.endswith("_xs") or c.endswith("_ys")))
+    ]
 
 
 def _shared_levels(a_cols, b_cols) -> int:
@@ -679,12 +595,12 @@ def _shared_levels(a_cols, b_cols) -> int:
     return n
 
 
-def _pair_payload(columns, simp_levels: int) -> list[str]:
-    """The array columns a pair row carries for the rows source: both
-    sides' pack columns (pack_store.pack_columns), the query side's
-    q_-prefixed."""
+def _pair_payload(columns, simp_levels: int, sources=ROW_SOURCES) -> list[str]:
+    """The array columns a pair row carries: the pack columns
+    (pack_store.pack_columns) of every side whose source is ``rows``,
+    under that side's prefix (q_ for the query side)."""
     cols, scal = pack_columns(columns, simp_levels)
-    return [f"q_{c}" for c in cols + scal] + cols + scal
+    return [p + c for kind, p in sources if kind == "rows" for c in cols + scal]
 
 
 def range_query_grid(
@@ -699,7 +615,6 @@ def range_query_grid(
     dfd_accept: bool | None = None,
     funnel_stats: bool = False,
     observations: dict | None = None,
-    attach: str = "auto",
 ) -> DataFrame:
     """Exact range query via the grid index: (query_id, traj_id) pairs with
     continuous Fréchet distance <= eps.
@@ -728,33 +643,14 @@ def range_query_grid(
     after an action; the flagship pipeline persists them in the stage
     manifest (north rule: per-partition lineage + metrics).
 
-    ``attach`` picks how the refine kernel's array inputs travel:
-
-    - ``"shuffle"`` — arrays ride the candidate join and the round-robin
-      repartition (~4 KB/pair; always valid, never optimal past small
-      corpora).
-    - ``"broadcast"`` — the candidate join and repartition move ONLY
-      (query_id, traj_id) id pairs; both sides' arrays are attached
-      inside the kernel from broadcast curve packs. Measured 1.4-2.7x
-      faster on the reference's real corpus (128-pt curves: the array
-      shuffle was the scaling bottleneck, BENCH.md), identical results
-      (tested). Valid while each curve table's array payload fits the
-      broadcast threshold.
-    - ``"pack"`` — ids-only like broadcast, but the dataset side's
-      arrays come from the co-partitioned on-disk curve-pack store
-      written next to the index (meta['pack_path'], see
-      sources/pack_store + write_index(pack=True)): each executor
-      mmap-gathers only the curves its candidate batches touch — the
-      scale arm for tables PAST the broadcast threshold, where
-      "shuffle" would pay ~4 KB/pair and "broadcast" can't hold the
-      table. The query side still broadcasts when it fits (the common
-      big-data/bounded-queries shape) and falls back to the same store
-      for the self-join shape.
-    - ``"auto"`` (default) — broadcast when BOTH sides' estimated array
-      payload (build-time meta['payload_bytes'] for the index side —
-      no per-query scan — with _est_broadcast_bytes/plan-stats gating
-      for the query side) fits spark.sql.autoBroadcastJoinThreshold;
-      else pack when the index carries a pack store; else shuffle."""
+    Each side's curves reach the refine kernel from the source
+    ``pack_store.choose_source`` picks for it: a broadcast curve pack
+    when the side fits spark.sql.autoBroadcastJoinThreshold (the dataset
+    side reads the build-time meta['payload_bytes']); else the disk store
+    meta['pack_path'] (write_index(pack=True)) for the dataset side, and
+    for the query side when ``symmetric``; else the side's arrays ride the
+    candidate join and the repartition (~4 KB/pair instead of ~16 B of
+    ids). Every source yields the same buffers: identical results."""
     from pyspark.sql import Observation
 
     # r06 upper-bound accept filters (reversed greedy + discrete-Fréchet,
@@ -770,34 +666,33 @@ def range_query_grid(
         dfd_accept = not funnel_stats
 
     spark = index_df.sparkSession
-    if attach == "auto":
-        thr = _broadcast_threshold(spark)
-        attach = "shuffle"
-        if thr > 0:
-            # the index side's payload estimate is computed ONCE at build
-            # time and carried in meta (like salt) — the auto gate must
-            # not re-scan the array columns of a 100-TB table per query
-            d_bytes = meta.get("payload_bytes")
-            if d_bytes is None:
-                d_bytes = _payload_bytes_gated(index_df, thr)
-            if d_bytes <= thr and _payload_bytes_gated(queries, thr) <= thr:
-                attach = "broadcast"
-            elif meta.get("pack_path"):
-                attach = "pack"
     # funnel columns (Agarwal simplifications) ride along when the index
     # was enriched on BOTH sides
     simp_levels = _shared_levels(index_df.columns, queries.columns)
-    ids_only = attach in ("broadcast", "pack")
-    if ids_only:
-        # candidates over scalar features only — no array bytes enter the
-        # join or the repartition
-        drop_d = [c for c in _array_cols(index_df) if not c.endswith("_eps")]
-        drop_q = [c for c in _array_cols(queries) if not c.endswith("_eps")]
-        cand = grid_candidates(
-            index_df.drop(*drop_d), queries.drop(*drop_q), eps, meta
-        )
-    else:
-        cand = grid_candidates(index_df, queries, eps, meta)
+    pack_path = meta.get("pack_path")
+    sources = (
+        choose_source(
+            queries, "q_", simp_levels, pack_path=pack_path if symmetric else None
+        ),
+        choose_source(
+            index_df,
+            "",
+            simp_levels,
+            payload_bytes=meta.get("payload_bytes"),
+            pack_path=pack_path,
+        ),
+    )
+
+    def join_input(df, spec):
+        # a side that does not ride the rows enters the candidate join over
+        # scalar features only — no array bytes in the join or repartition
+        if spec[0] == "rows":
+            return df
+        return df.drop(*_array_cols(df))
+
+    cand = grid_candidates(
+        join_input(index_df, sources[1]), join_input(queries, sources[0]), eps, meta
+    )
     accepted = cand.filter("accept_f3").select(
         F.col("q_traj_id").alias("query_id"), "traj_id"
     )
@@ -813,58 +708,10 @@ def range_query_grid(
             F.lit("f3_accept").alias("stage"),
             F.lit(True).alias("accepted"),
         )
-    # ids-only arms: the curve arrays (and simplification levels) travel
-    # once per executor — as a python broadcast of packed buffers, or
-    # gathered from the mmapped curve-pack store — not once per candidate
-    # pair: the join, the repartition and the JVM->Python Arrow stream
-    # each move ~16 bytes/pair instead of the ~4 KB/pair array payload.
-    # Broadcast packs are LRU-cached per table (pack_broadcast): repeated
-    # queries reuse one broadcast, eviction unpersists executor copies.
-    if attach == "pack":
-        pack_path = meta.get("pack_path")
-        if not pack_path:
-            raise ValueError(
-                "attach='pack' needs meta['pack_path'] — write the "
-                "index with write_index(..., pack=True) or call "
-                "pack_store.write_pack and set meta['pack_path']"
-            )
-        # query side: broadcast-pack when it fits (the common 100-TB
-        # shape: huge dataset, bounded query set); otherwise gather from a
-        # disk pack — the INDEX's own store only for the self-join shape
-        # (symmetric=True: queries ARE the indexed curves) or an explicit
-        # meta['query_pack_path']. A foreign over-threshold query table
-        # must NOT silently reuse the index store: overlapping traj_id
-        # spaces would gather the WRONG curves for the query side and
-        # return silently wrong results (only ids absent from the store
-        # trip the loud lookup KeyError) — raise instead.
-        thr = _broadcast_threshold(spark)
-        if thr > 0 and _payload_bytes_gated(queries, thr) <= thr:
-            q_spec = ("bcast", pack_broadcast(queries, simp_levels))
-        elif symmetric:
-            q_spec = ("disk", pack_path)
-        elif meta.get("query_pack_path"):
-            q_spec = ("disk", meta["query_pack_path"])
-        else:
-            raise ValueError(
-                "attach='pack' with an over-broadcast-threshold query "
-                "table: reusing the index's pack store is only exact "
-                "for the self-join shape (symmetric=True). Write a "
-                "pack for the query table (pack_store.write_pack) and "
-                "set meta['query_pack_path'], or raise the broadcast "
-                "threshold."
-            )
-        sources = (q_spec, ("disk", pack_path))
-    elif attach == "broadcast":
-        sources = (
-            ("bcast", pack_broadcast(queries, simp_levels)),
-            ("bcast", pack_broadcast(index_df, simp_levels)),
-        )
-    else:
-        sources = ROW_SOURCES
     to_refine = cand.filter(~F.col("accept_f3")).select(
         F.col("q_traj_id").alias("query_id"),
         "traj_id",
-        *([] if ids_only else _pair_payload(index_df.columns, simp_levels)),
+        *_pair_payload(index_df.columns, simp_levels, sources),
     )
     if symmetric:
         to_refine = to_refine.filter(F.col("query_id") <= F.col("traj_id"))

@@ -19,6 +19,15 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# MBR corner name -> (x column, y column) of the corner a curve is homed by
+# (grid.hpp:352-358; the corner itself is chosen by the A4/A5 statistic)
+CORNERS = {
+    "min_min": ("min_x", "min_y"),
+    "min_max": ("min_x", "max_y"),
+    "max_min": ("max_x", "min_y"),
+    "max_max": ("max_x", "max_y"),
+}
+
 
 def cell_coord(coord: Column, mesh: float) -> Column:
     """floor(coord / mesh) as int — reference grid.hpp:352-358."""

@@ -21,11 +21,9 @@ from pyspark.sql import functions as F
 
 from frechetrange_spark.operators.range_query import range_query_grid
 from frechetrange_spark.operators.simplifications import enrich_with_simplifications
-from frechetrange_spark.operators.tiling import cell_coord
+from frechetrange_spark.operators.tiling import CORNERS, cell_coord
 from frechetrange_spark.plans.checkpoints import CheckpointedPipeline
 from frechetrange_spark.sources.trajectories import assemble_curves, trajectory_points
-
-_CORNERS = {"min_min": ("min_x", "min_y")}
 
 
 def flagship_pipeline(
@@ -50,7 +48,7 @@ def flagship_pipeline(
     )
 
     def build_index(s: SparkSession) -> DataFrame:
-        cx, cy = _CORNERS["min_min"]
+        cx, cy = CORNERS["min_min"]
         enriched = enrich_with_simplifications(
             curves, levels=levels, fractions=fractions
         )

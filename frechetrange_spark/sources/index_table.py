@@ -20,19 +20,14 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_CORNERS = {
-    "min_min": ("min_x", "min_y"),
-    "min_max": ("min_x", "max_y"),
-    "max_min": ("max_x", "min_y"),
-    "max_max": ("max_x", "max_y"),
-}
+from frechetrange_spark.operators.tiling import CORNERS
 
 
 def _o1_sorted(index_df: DataFrame, corner: str) -> DataFrame:
     """Cluster by cell and sort within partitions by the per-cell border
     dimension with the wider spread (O1, grid.hpp:226-283) so parquet
     row-group min/max stats give O2's active-range skipping."""
-    cx_col, cy_col = _CORNERS[corner]
+    cx_col, cy_col = CORNERS[corner]
     spread = index_df.groupBy("cell_x", "cell_y").agg(
         (F.max(cx_col) - F.min(cx_col)).alias("_sx"),
         (F.max(cy_col) - F.min(cy_col)).alias("_sy"),
@@ -59,8 +54,8 @@ def write_index(
     ``pack=True`` additionally writes the co-partitioned curve-pack
     store (sources/pack_store: traj_id range-partitioned, id-sorted npy
     blocks + manifest) under ``path/pack`` and records it as
-    meta['pack_path'] — the array-attach arm for indexes whose payload
-    exceeds the broadcast threshold (range_query_grid attach='pack')."""
+    meta['pack_path'] — the dataset side's curve source once the index
+    payload exceeds the broadcast threshold (pack_store.choose_source)."""
     if pack:
         from frechetrange_spark.sources.pack_store import write_pack
 

@@ -11,17 +11,22 @@ side's source spec is one of three kinds:
 - ``("bcast", broadcast)`` — the whole curve table packed on the driver
   (``pack_curves``) and shipped in one SparkContext broadcast, LRU-cached
   per table (``pack_broadcast``). The pair rows carry ids only.
-- ``("disk", path)`` — the co-partitioned on-disk store below, the
-  attach arm for tables past the broadcast threshold. ``gather_pack``
-  resolves the batch's unique ids to blocks via the manifest, mmaps only
-  the touched blocks and gathers just the needed curves. The pair rows
-  carry ids only.
+- ``("disk", path)`` — the co-partitioned on-disk store below.
+  ``gather_pack`` resolves the batch's unique ids to blocks via the
+  manifest, mmaps only the touched blocks and gathers just the needed
+  curves. The pair rows carry ids only.
 - ``("rows", prefix)`` — the batch's own ``{prefix}xs``/``{prefix}ys``
   (and ``{prefix}s{i}_*``) columns, read zero-copy with identity
-  selectors: the shuffle arm, where arrays ride every pair row.
+  selectors: the arrays ride every pair row.
 
 Every kind yields the same buffers for the same curve, so the funnel and
 decider results are bit-identical across sources.
+
+Which kind a side gets is the engine's choice, made per side by
+``choose_source`` from what it can see: broadcast when that side's array
+payload fits ``spark.sql.autoBroadcastJoinThreshold``; else the disk
+store when one holds exactly that side's curves; else rows. The payload
+estimate and the threshold parsing live here too.
 
 The disk store: once a curve table's array payload exceeds the broadcast
 threshold, shipping arrays on every pair row costs ~4 KB per candidate
@@ -35,7 +40,7 @@ Per-executor amortization: block mmaps are cached per python worker
 process (workers are reused across batches/tasks), and the OS page cache
 shares the underlying bytes across workers on the same host — each
 executor reads a curve's bytes ~once per query, like the broadcast pack,
-instead of once per candidate pair like the shuffle arm. On a real
+instead of once per candidate pair like the rows source. On a real
 cluster the store lives on the shared store (HDFS/S3 via a local block
 cache); locally it is a directory.
 
@@ -72,6 +77,86 @@ def pack_columns(df_columns, simp_levels: int | None = None):
         scal.append(f"s{i}_eps")
         i += 1
     return cols, scal
+
+
+# ---------------------------------------------------------------------------
+# payload policy (driver side): how big a curve table's arrays are, and
+# whether they fit the broadcast threshold
+# ---------------------------------------------------------------------------
+
+
+def est_payload_bytes(points: int, rows: int) -> int:
+    """Estimated in-memory broadcast size of a curve table's array payload
+    from its point count (full-resolution arrays plus every stored
+    simplification level) and row count: 16 bytes per (x, y) point times
+    a 3x HashedRelation overhead factor, plus per-row slack."""
+    return points * 16 * 3 + rows * 64
+
+
+def _est_broadcast_bytes(df: DataFrame) -> int:
+    """est_payload_bytes of a curve table, with the point counts summed
+    exactly over the list sizes of every stored resolution (one job)."""
+    xs_cols = [c for c in pack_columns(df.columns)[0] if c.endswith("xs")]
+    row = df.agg(*[F.sum(F.size(c)) for c in xs_cols], F.count("*")).collect()[0]
+    return est_payload_bytes(sum(int(v or 0) for v in row[:-1]), int(row[-1]))
+
+
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's own size estimate for the plan (file-size-based for
+    parquet scans) — free: no job runs. None when the JVM handle doesn't
+    expose stats (e.g. a mocked session)."""
+    try:
+        return int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().longValue()
+        )
+    except Exception:
+        return None
+
+
+def _payload_bytes_gated(df: DataFrame, thr: int) -> int:
+    """_est_broadcast_bytes with a known-large short-circuit: when
+    Catalyst's free plan-size estimate already exceeds 8x the broadcast
+    threshold, skip the full array-column scan and report the plan size
+    (any value > thr suffices — on-disk parquet of incompressible float
+    trajectories is ~1/3 the in-memory payload, so 8x leaves a wide
+    safety margin against compression). Keeps ``choose_source`` from
+    paying a full pass over a 100-TB table just to conclude it does not
+    fit."""
+    plan_bytes = _plan_size_bytes(df)
+    if plan_bytes is not None and plan_bytes > 8 * thr:
+        return plan_bytes
+    return _est_broadcast_bytes(df)
+
+
+_BYTE_SUFFIXES = {
+    "k": 1024,
+    "m": 1024**2,
+    "g": 1024**3,
+    "t": 1024**4,
+    "p": 1024**5,
+}
+
+
+def _parse_byte_string(raw: str) -> int:
+    """Spark-style byte string: bare bytes or a k/m/g/t/p suffix with an
+    optional trailing 'b' (JavaUtils.byteStringAsBytes semantics: '10m',
+    '64K', '1gb'), case-insensitive."""
+    s = raw.strip().lower()
+    mult = 1
+    if s.endswith("b") and len(s) > 1 and s[-2] in _BYTE_SUFFIXES:
+        s = s[:-1]
+    if s and s[-1] in _BYTE_SUFFIXES:
+        mult = _BYTE_SUFFIXES[s[-1]]
+        s = s[:-1]
+    return int(s) * mult
+
+
+def _broadcast_threshold(spark) -> int:
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "33554432")
+    try:
+        return max(_parse_byte_string(raw), 0)
+    except ValueError:
+        return 32 * 1024 * 1024
 
 
 def _block_writer(cols: list[str], scal: list[str], out_dir: str):
@@ -134,10 +219,6 @@ def write_pack(
     if n_blocks is None:
         par = spark.sparkContext.defaultParallelism
         if payload_bytes is None:
-            from frechetrange_spark.operators.range_query import (
-                _est_broadcast_bytes,
-            )
-
             payload_bytes = _est_broadcast_bytes(curves)
         n_blocks = max(par, -(-payload_bytes // target_block_bytes))
     os.makedirs(path, exist_ok=True)
@@ -290,9 +371,9 @@ def pack_curves(df: DataFrame, simp_levels: int) -> dict:
     """Driver-side pack of a curve table for the broadcast source: every
     array column as (flat float64, offsets int64) buffers over the curves
     SORTED by traj_id, plus the per-curve simplification eps scalars.
-    Only called when the table passed the broadcast-size gate
-    (range_query._est_broadcast_bytes <= autoBroadcastJoinThreshold), so
-    the collect is bounded by the same budget a broadcast hash join would
+    Only called when the table passed the broadcast-size gate of
+    ``choose_source`` (payload <= autoBroadcastJoinThreshold), so the
+    collect is bounded by the same budget a broadcast hash join would
     use."""
     cols, scal = pack_columns(df.columns, simp_levels)
     pdf = df.select("traj_id", *cols, *scal).orderBy("traj_id").toPandas()
@@ -412,6 +493,36 @@ def resolve_pack(spec, ids: np.ndarray, rb, simp_levels: int = 0):
     else:
         pack = gather_pack(v, np.unique(ids), simp_levels)
     return pack, lookup(pack["ids"], ids)
+
+
+def choose_source(
+    df: DataFrame,
+    prefix: str,
+    simp_levels: int = 0,
+    payload_bytes: int | None = None,
+    pack_path: str | None = None,
+):
+    """The source spec for ONE side of a pair stream over the curves of
+    ``df``, in this order:
+
+    1. ``("bcast", pack_broadcast(df, simp_levels))`` when the side's
+       payload fits ``spark.sql.autoBroadcastJoinThreshold``:
+       ``payload_bytes`` if known (an index's build-time meta), else
+       ``_payload_bytes_gated``.
+    2. ``("disk", pack_path)``: pass ``pack_path`` only when that store
+       holds exactly this side's curves (a foreign query table with
+       overlapping ids would gather the index's curves).
+    3. ``("rows", prefix)``: the caller carries the side's arrays on the
+       pair rows as ``{prefix}xs``/``{prefix}ys`` (+ simplifications)."""
+    thr = _broadcast_threshold(df.sparkSession)
+    if thr > 0:
+        if payload_bytes is None:
+            payload_bytes = _payload_bytes_gated(df, thr)
+        if payload_bytes <= thr:
+            return ("bcast", pack_broadcast(df, simp_levels))
+    if pack_path:
+        return ("disk", pack_path)
+    return ("rows", prefix)
 
 
 def curve_buffers(pack: dict, level: int | None = None) -> tuple:

@@ -148,7 +148,7 @@ def test_knn_past_broadcast_threshold(spark, corpus):
     """Past the broadcast threshold the arrays ride the pair rows instead
     of broadcast curve packs; ids, ranks and distances must be
     bit-identical to the broadcast-pack run."""
-    from frechetrange_spark.operators.range_query import _payload_bytes_gated
+    from frechetrange_spark.sources.pack_store import _payload_bytes_gated
 
     queries = corpus.filter(F.col("traj_id") % 150 == 0)
     key = ["query_id", "rank"]

@@ -1,6 +1,9 @@
-"""Co-partitioned curve-pack store (sources/pack_store): the attach arm
-for curve tables past the broadcast threshold. Parity-gated against both
-existing arms — all three must return identical result sets."""
+"""Co-partitioned curve-pack store (sources/pack_store) and the per-side
+curve-source choice (pack_store.choose_source). Each source is selected
+through what the engine sees — the broadcast threshold conf and
+meta['pack_path'] — and every mix must return identical result sets."""
+
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -8,6 +11,7 @@ from pyspark.sql import functions as F
 
 from frechetrange_spark.operators.range_query import (
     build_grid_index,
+    range_query_bruteforce,
     range_query_grid,
 )
 from frechetrange_spark.operators.simplifications import (
@@ -23,6 +27,41 @@ from frechetrange_spark.sources.trajectories import (
     trajectory_points,
 )
 from tests.conftest import SF_SMALL
+
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextmanager
+def broadcast_threshold(spark, value):
+    old = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(THRESHOLD, old)
+
+
+def _pairs(df):
+    return set(map(tuple, df.collect()))
+
+
+def _all_rows(spark, idx, queries, meta, **kw):
+    """Both sides' arrays ride the pair rows: broadcast disabled, no pack."""
+    unpacked = {k: v for k, v in meta.items() if k != "pack_path"}
+    with broadcast_threshold(spark, -1):
+        return _pairs(range_query_grid(idx, queries, 15.0, unpacked, **kw))
+
+
+def _packed_index(spark, curves, tmp_path):
+    from frechetrange_spark.sources.index_table import read_index, write_index
+
+    index_df, meta = build_grid_index(curves, 15.0, corner="min_min")
+    path = str(tmp_path / "idx")
+    write_index(index_df, path, meta, pack=True)
+    idx, meta2 = read_index(spark, path)
+    assert meta2.get("pack_path")
+    return idx, meta2
 
 
 @pytest.fixture(scope="module")
@@ -69,107 +108,61 @@ def test_missing_ids_raise(spark, enriched, tmp_path):
 
 
 def test_pack_attach_parity(spark, enriched, tmp_path):
-    """attach='pack' == 'broadcast' == 'shuffle' result sets, with the
-    funnel columns riding and with the query side broadcast-packed."""
-    from frechetrange_spark.sources.index_table import read_index, write_index
+    """disk (dataset) + broadcast (query) == all-broadcast == all-rows
+    result sets, with the funnel columns riding."""
+    from frechetrange_spark.sources.pack_store import _est_broadcast_bytes
 
-    index_df, meta = build_grid_index(enriched, 15.0, corner="min_min")
-    path = str(tmp_path / "idx")
-    write_index(index_df, path, meta, pack=True)
-    idx, meta2 = read_index(spark, path)
-    assert meta2.get("pack_path")
+    idx, meta = _packed_index(spark, enriched, tmp_path)
     queries = idx.filter(F.col("traj_id") % 20 == 0)
-    res = {
-        a: set(
-            map(
-                tuple,
-                range_query_grid(idx, queries, 15.0, meta2, attach=a).collect(),
-            )
-        )
-        for a in ("shuffle", "broadcast", "pack")
-    }
-    assert res["pack"] == res["shuffle"] == res["broadcast"]
-    assert len(res["pack"]) > 0
+    q_bytes = _est_broadcast_bytes(queries)
+    assert q_bytes < meta["payload_bytes"]
+    rows = _all_rows(spark, idx, queries, meta)
+    bcast = _pairs(range_query_grid(idx, queries, 15.0, meta))
+    with broadcast_threshold(spark, (q_bytes + meta["payload_bytes"]) // 2):
+        disk = _pairs(range_query_grid(idx, queries, 15.0, meta))
+    assert disk == rows == bcast
+    assert len(disk) > 0
 
 
 def test_pack_self_join_disk_query_side(spark, enriched, tmp_path):
-    """Symmetric self-join with the broadcast threshold forced to 0-ish:
-    the query side cannot broadcast and falls back to the SAME disk
-    store; results still match the shuffle arm, and attach='auto' routes
-    to the pack arm (meta carries pack_path + over-threshold payload)."""
-    from frechetrange_spark.sources.index_table import read_index, write_index
-
-    index_df, meta = build_grid_index(enriched, 15.0, corner="min_min")
-    path = str(tmp_path / "idx")
-    write_index(index_df, path, meta, pack=True)
-    idx, meta2 = read_index(spark, path)
-    want = set(
-        map(
-            tuple,
-            range_query_grid(
-                idx, idx, 15.0, meta2, symmetric=True, attach="shuffle"
-            ).collect(),
-        )
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
-        got = set(
-            map(
-                tuple,
-                range_query_grid(
-                    idx, idx, 15.0, meta2, symmetric=True, attach="pack"
-                ).collect(),
-            )
-        )
-        assert got == want
-        auto = set(
-            map(
-                tuple,
-                range_query_grid(
-                    idx, idx, 15.0, meta2, symmetric=True, attach="auto"
-                ).collect(),
-            )
-        )
-        assert auto == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    """Symmetric self-join with the broadcast threshold at 1k: neither side
+    can broadcast and both read the SAME disk store (the query side is
+    the indexed table); results still match the all-rows arm."""
+    idx, meta = _packed_index(spark, enriched, tmp_path)
+    want = _all_rows(spark, idx, idx, meta, symmetric=True)
+    with broadcast_threshold(spark, "1k"):
+        got = _pairs(range_query_grid(idx, idx, 15.0, meta, symmetric=True))
+    assert got == want
 
 
-def test_pack_foreign_over_threshold_query_raises(spark, enriched, tmp_path):
-    """r06 (advice item): an over-broadcast-threshold query table that is
-    NOT the indexed table itself (symmetric=False, no query_pack_path)
-    must fail loudly instead of silently gathering the index's curves
-    for the query side — id-overlapping foreign data would otherwise
-    return wrong results without any error."""
-    from frechetrange_spark.sources.index_table import read_index, write_index
+def test_pack_foreign_over_threshold_query_exact(spark, tmp_path):
+    """A foreign query table past the broadcast threshold against a packed
+    index: the dataset side reads the disk store and the query side rides
+    the rows — it must never be given the index store's curves. The query
+    table shares every traj_id with the index but its curves are shifted
+    by +3 in x, so reading the index's store for it would be wrong."""
+    pts = trajectory_points(spark, SF_SMALL)
+    curves = assemble_curves(pts)
+    queries = assemble_curves(pts.withColumn("x", F.col("x") + 3.0))
+    idx, meta = _packed_index(spark, curves, tmp_path)
+    want = _pairs(range_query_bruteforce(curves, queries, 15.0))
+    with broadcast_threshold(spark, meta["payload_bytes"] // 2):
+        got = _pairs(range_query_grid(idx, queries, 15.0, meta))
+    assert got == want
+    assert len(got) > 0
 
-    index_df, meta = build_grid_index(enriched, 15.0, corner="min_min")
-    path = str(tmp_path / "idx")
-    write_index(index_df, path, meta, pack=True)
-    idx, meta2 = read_index(spark, path)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
-        with pytest.raises(ValueError, match="query table"):
-            range_query_grid(idx, idx, 15.0, meta2, attach="pack")
-        # and an explicit query_pack_path pointing at the (correct) store
-        # restores the old behaviour for the genuinely-same-table case
-        meta3 = dict(meta2, query_pack_path=meta2["pack_path"])
-        got = set(
-            map(
-                tuple,
-                range_query_grid(idx, idx, 15.0, meta3, attach="pack").collect(),
-            )
-        )
-        want = set(
-            map(
-                tuple,
-                range_query_grid(
-                    idx, idx, 15.0, meta2, attach="shuffle"
-                ).collect(),
-            )
-        )
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+def test_mixed_sources_query_broadcast_dataset_rows(spark, enriched):
+    """An unpacked index past the threshold with a small query table: the
+    query side broadcasts and the dataset side rides the rows; results
+    match the all-rows and all-broadcast arms."""
+    from frechetrange_spark.sources.pack_store import _est_broadcast_bytes
+
+    idx, meta = build_grid_index(enriched, 15.0, corner="min_min")
+    queries = enriched.filter(F.col("traj_id") % 20 == 0)
+    q_bytes = _est_broadcast_bytes(queries)
+    bcast = _pairs(range_query_grid(idx, queries, 15.0, meta))
+    with broadcast_threshold(spark, (q_bytes + meta["payload_bytes"]) // 2):
+        mixed = _pairs(range_query_grid(idx, queries, 15.0, meta))
+    assert mixed == _all_rows(spark, idx, queries, meta) == bcast
+    assert len(mixed) > 0

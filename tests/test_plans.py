@@ -110,6 +110,50 @@ def test_refine_input_is_explicitly_repartitioned(spark):
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan or "mapInArrow" in plan
 
 
+def _refine_repartition_input(plan: str) -> set[str]:
+    """Column names entering the round-robin Exchange that feeds the
+    refine kernel (ids stripped: ``xs#12`` -> ``xs``)."""
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        if "RoundRobinPartitioning" in line and lines[i - 1].startswith("Input"):
+            cols = lines[i - 1].split(": ", 1)[1].strip("[]")
+            return {c.split("#")[0].strip() for c in cols.split(",")}
+    raise AssertionError("no round-robin repartition in plan")
+
+
+def test_refine_repartition_carries_only_rows_side_arrays(spark):
+    """The repartition feeding the refine carries a side's array columns
+    (q_xs/q_ys for the query side, xs/ys for the dataset side) only when
+    that side's curves ride the rows; broadcast and disk sides move ids
+    only."""
+    from frechetrange_spark.operators.range_query import range_query_grid
+    from frechetrange_spark.sources.pack_store import _est_broadcast_bytes
+
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    curves = load_curves(spark, SF_SMALL)
+    queries = curves.filter(F.col("traj_id") % 50 == 0)
+    index_df, meta = build_grid_index(curves, 15.0, corner="min_min")
+    between = (_est_broadcast_bytes(queries) + meta["payload_bytes"]) // 2
+    cases = [
+        # (threshold, meta, query side rides rows, dataset side rides rows)
+        (None, meta, False, False),  # both broadcast
+        (between, meta, False, True),  # query broadcast, dataset rows
+        (between, {**meta, "pack_path": "/nonexistent"}, False, False),  # disk
+        (-1, meta, True, True),  # all rows
+    ]
+    old = spark.conf.get(conf)
+    try:
+        for thr, m, q_rows, d_rows in cases:
+            spark.conf.set(conf, old if thr is None else str(thr))
+            plan = _explain(range_query_grid(index_df, queries, 15.0, m))
+            cols = _refine_repartition_input(plan)
+            assert {"query_id", "traj_id"} <= cols, (thr, cols)
+            assert bool({"q_xs", "q_ys"} & cols) == q_rows, (thr, cols)
+            assert bool({"xs", "ys"} & cols) == d_rows, (thr, cols)
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_trajectory_reconstruction_udf_free(spark):
     """The carrier-table -> point-table reconstruction is pure Catalyst."""
     from frechetrange_spark.sources.trajectories import trajectory_points

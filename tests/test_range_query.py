@@ -240,10 +240,11 @@ def test_random_corpus_property(spark, tmp_path):
 
 def test_attach_modes_identical(spark):
     """The refine input can travel two ways — arrays riding the shuffle
-    (the 100-TB shape) or ids-only repartition + broadcast array attach
-    (faster while the curve table fits the threshold; BENCH.md real-corpus
-    section). Result sets must be identical in both, with and without the
-    funnel columns and under the symmetric fast path."""
+    (the 100-TB shape, selected here by disabling broadcast) or ids-only
+    repartition + broadcast curve packs (the default while the curve
+    tables fit the threshold; BENCH.md real-corpus section). Result sets
+    must be identical in both, with and without the funnel columns and
+    under the symmetric fast path."""
     from frechetrange_spark.operators.range_query import (
         build_grid_index,
         range_query_grid,
@@ -262,25 +263,20 @@ def test_attach_modes_identical(spark):
     enriched = enrich_with_simplifications(
         plain, levels=2, fractions=(0.07, 0.6)
     ).persist()
+    conf = "spark.sql.autoBroadcastJoinThreshold"
     for curves, sym in ((plain, True), (enriched, False)):
         idx, meta = build_grid_index(curves, 15.0, corner="min_min")
+        assert "pack_path" not in meta
         queries = curves if sym else curves.filter(F.col("traj_id") % 20 == 0)
-        shuf = set(
-            map(
-                tuple,
-                range_query_grid(
-                    idx, queries, 15.0, meta, symmetric=sym, attach="shuffle"
-                ).collect(),
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, "-1")
+        try:
+            shuf = _pairs(
+                range_query_grid(idx, queries, 15.0, meta, symmetric=sym)
             )
-        )
-        bcast = set(
-            map(
-                tuple,
-                range_query_grid(
-                    idx, queries, 15.0, meta, symmetric=sym, attach="broadcast"
-                ).collect(),
-            )
-        )
+        finally:
+            spark.conf.set(conf, old)
+        bcast = _pairs(range_query_grid(idx, queries, 15.0, meta, symmetric=sym))
         assert bcast == shuf
 
 
@@ -324,16 +320,16 @@ class TestAutoMesh:
         """The `pairs` statistic must equal the ACTUAL equi-join output
         size of grid_candidates before the F1/F2 predicates — it is a
         histogram identity, not an estimate."""
-        from frechetrange_spark.operators.range_query import (
-            _CORNERS,
+        from frechetrange_spark.operators.range_query import mesh_costs
+        from frechetrange_spark.operators.tiling import (
+            CORNERS,
             cell_coord,
-            mesh_costs,
+            explode_neighbor_cells,
         )
-        from frechetrange_spark.operators.tiling import explode_neighbor_cells
 
         eps, mesh = 15.0, 30.0
         costs = mesh_costs(corpus, eps, [mesh], corner="min_min")
-        cx, cy = _CORNERS["min_min"]
+        cx, cy = CORNERS["min_min"]
         homes = corpus.select(
             cell_coord(F.col(cx), mesh).alias("cell_x"),
             cell_coord(F.col(cy), mesh).alias("cell_y"),
